@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: warms the store (load excluded from query timings, matching how the
   * reference reports query latencies post-load), then times every SparkEntry query.
   * Prints ONE JSON line for the driver.
@@ -7,21 +6,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val tSess = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // id-pair frames (16 B/row) broadcast far beyond the 10 MB default; 64 MB is the
-      // right dimension-table ceiling for executors of this size
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val sessionSec = (System.nanoTime() - tSess) / 1e9
     // warm: build the parquet-backed statement store once (bulk-load phase).
     // load_sec is COLD (derive+write store/lexicon/text index) only when the

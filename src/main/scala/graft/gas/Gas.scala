@@ -133,8 +133,7 @@ object Gas {
     * pay its |V| self-join; jump-driven label changes re-enter the delta set,
     * so jump + delta-scatter compose.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-                          jumpAfter: Int = 3): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val adj = undirected(edges)
     var labels = adj.select(col("src").as("vertex"))
       .unionByName(adj.select(col("dst").as("vertex")))
@@ -153,12 +152,13 @@ object Gas {
           least(col("label"), coalesce(col("nl"), col("label"))).as("label2"),
           col("label"))
         .localCheckpoint(false) // lazy: the changed-count job materializes it; delta and next labels reuse the blocks
-      // jump only on slow convergence of a LARGE frontier: not-halving signals
-      // high diameter, but a small hovering tail frontier makes propagation
-      // cheap while the jump still costs a full |V| self-join — there the jump
-      // is a pure tax (measured 5× on an amplified low-diameter graph). ≥5% of
-      // |V| keeps the jump for wavefronts that actually dominate the runtime.
-      val updated = if (iter < jumpAfter || changed * 2 < prevChanged ||
+      // jump only from round 3 on, and only on slow convergence of a LARGE
+      // frontier: not-halving signals high diameter, but a small hovering
+      // tail frontier makes propagation cheap while the jump still costs a
+      // full |V| self-join — there the jump is a pure tax (measured 5× on an
+      // amplified low-diameter graph). ≥5% of |V| keeps the jump for
+      // wavefronts that actually dominate the runtime.
+      val updated = if (iter < 3 || changed * 2 < prevChanged ||
           changed * 20 < nV) prop else {
         // prop self-joins here: materialize it first (one job) so the join's
         // two concurrently-running input stages read blocks instead of each
@@ -317,7 +317,7 @@ object Gas {
       .localCheckpoint()
     // Deliberately UNHINTED joins. localCheckpoint hides size stats, so the
     // closure join defaults to a shuffle rather than broadcasting the edge set;
-    // a measured A/B (tools/TriProf + QBench, SCALE.md round-10 note) put an
+    // a measured A/B (SCALE.md round-10 note) put an
     // explicit broadcast(edges) hint at parity locally — and at cluster scale
     // broadcast REPLICATES the edge set per executor (|edges|·N moved) while
     // the shuffle moves each wedge once, so past ~|wedges|/|edges| executors

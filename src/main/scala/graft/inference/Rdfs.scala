@@ -188,7 +188,7 @@ object Rdfs {
 
   /** Which TM path the last Update.withTruthMaintenance took ("delta" |
     * "full" | "none") — test/diagnostic instrumentation only. Thread-local:
-    * every reader (Dev probes, TmAB, the TM suites) inspects it on the thread
+    * every reader (TmAB, the TM suites) inspects it on the thread
     * that just performed the update, and suites now run concurrently in one
     * test JVM — a process-global would race across suites.
     */
@@ -224,11 +224,6 @@ object Rdfs {
       lostTaint: Option[DataFrame], addSpo: Option[DataFrame],
       addAlias: Option[DataFrame], promSpo: Option[DataFrame])
 
-  // -Dgraft.tm.prof counter: ONE listener for the JVM's lifetime (re-registering
-  // per invocation leaked listeners and double-counted recordsRead)
-  private val tmProfCtr = new java.util.concurrent.atomic.AtomicLong()
-  private val tmProfRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   def truthMaintainDelta(next: GraftStore,
                          removed0: DataFrame, added0: DataFrame): Option[GraftStore] =
     graft.engine.DfOps.noConstraints(next.spark)(
@@ -237,37 +232,16 @@ object Rdfs {
   private def truthMaintainDeltaImpl(next: GraftStore,
                          removed0: DataFrame, added0: DataFrame): Option[GraftStore] = {
     val spark = next.spark
-    lazy val profRows = {
-      if (tmProfRegistered.compareAndSet(false, true))
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-                te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-              if (te.taskMetrics != null)
-                tmProfCtr.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-          })
-      tmProfCtr
-    }
-    def t[A](label: String)(f: => A): A =
-      if (!sys.props.contains("graft.tm.prof")) f else {
-        val t0 = System.nanoTime()
-        val r0 = profRows.get()
-        val r = f
-        Thread.sleep(200)
-        println(f"TMDELTA $label ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"rows=${profRows.get() - r0}")
-        r
-      }
     // ONE job materializes both sides of the delta (tagged union); freshLeaf
     // (not bare localCheckpoint) because the buffers often share upstream
     // lineage (a Modify's delete and insert both instantiate from one
     // solution checkpoint) and every downstream union re-splits them
-    val delta0 = t("diff")(graft.engine.DfOps.freshLeaf(removed0
+    val delta0 = graft.engine.DfOps.freshLeaf(removed0
       .select(col("s"), col("p"), col("o"), col("g"), col("stype"))
       .withColumn("__r", lit(true))
       .unionByName(added0
         .select(col("s"), col("p"), col("o"), col("g"), col("stype"))
-        .withColumn("__r", lit(false)))))
+        .withColumn("__r", lit(false))))
     val removed = delta0.filter(col("__r")).drop("__r")
     val added = delta0.filter(!col("__r")).drop("__r")
     // delta-size valve: the retraction/novelty key sets below ride broadcast
@@ -285,12 +259,12 @@ object Rdfs {
     val charMarks = Seq(transitiveId, symmetricId, functionalId,
       invFunctionalId, restrictionId)
     val isMark = col("p")("id") === typeId && col("o")("id").isin(charMarks: _*)
-    val pidRows = t("delta-pids")(delta0
+    val pidRows = delta0
       .select(col("p")("id").as("pid"), isMark.as("chr"),
         when(isMark, col("o")("id")).as("moid"),
         when(isMark, col("s")).as("mprop"),
         when(isMark, col("__r")).as("mrem"))
-      .distinct().limit(1001).collect())
+      .distinct().limit(1001).collect()
     if (pidRows.isEmpty) return Some(next)
     val deltaPids = pidRows.map(_.getLong(0)).toSet
     if (pidRows.length > 1000) return None
@@ -344,7 +318,7 @@ object Rdfs {
     // presence probe (inferred sameAs rows can only derive from explicit
     // sameAs or FP/IFP declarations, the latter guarded via the vocabs; a
     // removed-side sameAs row is already caught by the deltaPids guard above)
-    val (vOld, vNew, expHasSameAs) = t("vocab")(collectVocab2(oldExp, newExp))
+    val (vOld, vNew, expHasSameAs) = collectVocab2(oldExp, newExp)
     // materialized sameAs state (explicit pairs in the new view, or a delta
     // touching the sameAs partition): no longer an automatic recompute — the
     // alias map IS the at-rest all-pairs sameAs partition (Case A: classes
@@ -376,16 +350,16 @@ object Rdfs {
     // inverse-partner straight copies) mirrors the closure's accumulated-edge
     // flip. FP/IFP (r16): the old/new sets gate the minted-pair class-diff
     // work in the fpBase section below.
-    def oldCharRows(charId: Long, newRows: Array[Row], tag: String): Array[Row] = {
+    def oldCharRows(charId: Long, newRows: Array[Row]): Array[Row] = {
       val mk = markRows.filter(_.getLong(2) == charId)
       if (mk.isEmpty) newRows
       else {
         val newIdSet = newRows.map(idOf).toSet
         val touchedP = mk.map(_.getStruct(3)).map(idOf).distinct
-        val oldHas = t(tag)(oldExp
+        val oldHas = oldExp
           .filter(col("p_id") === typeId && col("o")("id") === charId &&
             col("s")("id").isin(touchedP: _*))
-          .select(col("s")("id")).distinct().collect().map(_.getLong(0)).toSet)
+          .select(col("s")("id")).distinct().collect().map(_.getLong(0)).toSet
         val oldIds = (newIdSet -- touchedP) ++ touchedP.filter(oldHas)
         val oldOnly = mk.map(_.getStruct(3))
           .filter(r => oldIds(idOf(r)) && !newIdSet(idOf(r)))
@@ -394,11 +368,11 @@ object Rdfs {
       }
     }
     val symOldRows: Array[Row] =
-      oldCharRows(symmetricId, vNew.symProps, "sym-mark-old-probe")
+      oldCharRows(symmetricId, vNew.symProps)
     val funcOldRows: Array[Row] =
-      oldCharRows(functionalId, vNew.funcProps, "fp-mark-old-probe")
+      oldCharRows(functionalId, vNew.funcProps)
     val invFuncOldRows: Array[Row] =
-      oldCharRows(invFunctionalId, vNew.invFuncProps, "ifp-mark-old-probe")
+      oldCharRows(invFunctionalId, vNew.invFuncProps)
     def invBoth(inv: Array[(Row, Row)], syms: Array[Row]): Seq[(Row, Row)] =
       ((inv ++ inv.map(_.swap)).toSeq ++ syms.map(r => (r, r)))
         .map(p => (idOf(p._1), idOf(p._2)) -> p).toMap.values.toSeq
@@ -454,10 +428,10 @@ object Rdfs {
       if (markRows.isEmpty) (transNewIdSet, Array.empty[Row])
       else {
         val touched = markRows.map(_.getStruct(3)).map(idOf).distinct
-        val oldHas = t("mark-old-probe")(oldExp
+        val oldHas = oldExp
           .filter(col("p_id") === typeId && col("o")("id") === transitiveId &&
             col("s")("id").isin(touched: _*))
-          .select(col("s")("id")).distinct().collect().map(_.getLong(0)).toSet)
+          .select(col("s")("id")).distinct().collect().map(_.getLong(0)).toSet
         val oldIds = (transNewIdSet -- touched) ++ touched.filter(oldHas)
         val rows = markRows.map(_.getStruct(3))
           .filter(r => oldIds(idOf(r)) && !transNewIdSet(idOf(r)))
@@ -566,8 +540,8 @@ object Rdfs {
     // inferred sameAs rows can only stem from explicit sameAs (guarded via
     // expHasSameAs/saTouched) or FP/IFP minting — probe only when FP vocab
     // exists, pruned to the sameAs partition
-    val infHasSameAs = fpBase.nonEmpty && t("inf-sameas-probe")(
-      !inf.filter(col("p_id") === sameAsId).limit(1).isEmpty)
+    val infHasSameAs = fpBase.nonEmpty &&
+      !inf.filter(col("p_id") === sameAsId).limit(1).isEmpty
     val saPresent = expHasSameAs || saTouched || infHasSameAs || fpClassWork
 
     /** FP/IFP-minted sameAs id pairs under the NEW view over the NEW facts,
@@ -645,8 +619,7 @@ object Rdfs {
         .select(col("s")("id").as("n"))
         .unionByName(removed.filter(col("p")("id") === sameAsId)
           .select(col("s")("id").as("n")))
-      if (t("sa-trans-overlap")(
-          !tNodes.join(saMembers, Seq("n"), "left_semi").limit(1).isEmpty))
+      if (!tNodes.join(saMembers, Seq("n"), "left_semi").limit(1).isEmpty)
         return None
     }
 
@@ -706,7 +679,7 @@ object Rdfs {
     // and checkpointed — the shape of seededPathIds, keyed by p_id.
     val (lostTransSpo, newTransSpo, promTransSpo, transReach) =
       if (transTouched.isEmpty) (None, None, None, None)
-      else t("trans-cone") {
+      else {
         val tSeq = transTouched.toSeq
         val statesNewL = transStates.toSeq.flatMap { case (t0, (sn, _)) =>
           sn.toSeq.map(s => (t0, s._1, s._2)) }
@@ -991,10 +964,10 @@ object Rdfs {
         // force the distributed class diff)
         val cap = tmProp("graft.tm.sa.driverMax")
           .map(_.toInt).getOrElse(2000000)
-        val (oldArr, newArr, remArr) = t("sa-collect")((
+        val (oldArr, newArr, remArr) = (
           oldIdsDf.limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1))),
           newExpIdsDf.limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1))),
-          remSaIds.limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1)))))
+          remSaIds.limit(cap + 1).collect().map(r => (r.getLong(0), r.getLong(1))))
         val driverFits =
           oldArr.length <= cap && newArr.length <= cap && remArr.length <= cap
         // (dDelDf, dAddDf, promDf, nDel, nAdd, nProm, lost-side member heads)
@@ -1026,7 +999,7 @@ object Rdfs {
             (idPairs(dDel), idPairs(dAdd), idPairs(promPairs),
               dDel.size.toLong, dAdd.size.toLong, promPairs.size.toLong,
               Some(dDel.map(_._1).distinct))
-          } else t("sa-dist-cc") {
+          } else {
             val comps = graft.gas.Gas.connectedComponents(
               newExpIdsDf.select(col("a").as("src"), col("b").as("dst")))
             val members = comps
@@ -1083,7 +1056,7 @@ object Rdfs {
         // pass over the fact table; output is cone-sized)
         val lostTaint =
           if (nDel == 0) None
-          else t("sa-lost") {
+          else {
             val dDelAlias = toAlias(dDelDf).localCheckpoint()
             val aliasOldO = aliasOld.withColumnRenamed("alias", "alias2")
               .withColumnRenamed("xid", "yid")
@@ -1140,14 +1113,14 @@ object Rdfs {
     // transitive fixpoint after rdfs7/inverse/hasValue, so their downstream
     // entailments live only in sameAs/dom/rng/rdfs9 — feeding them to the
     // earlier arms would suspect rows the materializer never derived
-    val delSuspects = t("delta-derive-del")(deltaDerive(spark, oldFacts, removedTaint,
+    val delSuspects = deltaDerive(spark, oldFacts, removedTaint,
       scOld, spOld, vOld.dom.toSeq, vOld.rng.toSeq, ibOld, vOld.restrictions,
       dScDel, dSpDel, dDomDel, dRngDel, dIbDel, saDelta.map(_.aliasOld),
       lateTaint = lostTransSpo,
       // old EXPLICIT view for the schema arms (closure premises)
       explicitFacts = Some(exp.select(col("s"), col("p"), col("o"), col("p_id"))
         .unionByName(removed.filter(col("stype") =!= GraftStore.STYPE_INFERRED)
-          .select(col("s"), col("p"), col("o"), col("p")("id").as("p_id"))))))
+          .select(col("s"), col("p"), col("o"), col("p")("id").as("p_id")))))
     // The removed rows THEMSELVES are suspects too: an entailment whose
     // materialization was novelty-suppressed by an explicit copy must be
     // PROMOTED to Inferred when that copy is deleted but it stays derivable
@@ -1158,22 +1131,22 @@ object Rdfs {
     // the lost transitive pairs themselves enter the suspect set (they are
     // retracted unless the reach retains them); their downstream entailments
     // were suspected via the lateTaint arms above
-    val suspects = t("suspects")(graft.engine.DfOps.freshLeaf(
+    val suspects = graft.engine.DfOps.freshLeaf(
       dedupK(delSuspects.unionByName(lostSchemaStmts)
         .unionByName(removedTaint)
-        .unionByName(lostTransSpo.getOrElse(lostSchemaStmts.limit(0))))))
+        .unionByName(lostTransSpo.getOrElse(lostSchemaStmts.limit(0)))))
     // mega-cone valve: the suspect keys broadcast into every re-derivation
     // arm — a delta whose taint cone reaches corpus scale (a mega equivalence
     // class, a hub-heavy schema) is better served by the recompute than by a
     // corpus-sized broadcast (count on the checkpointed frame is metadata-cheap)
     // ONE action serves both valves: the mega-cone bound and the emptiness
     // gate below (a separate isEmpty probe was a whole extra job per pass)
-    val nSuspects = t("suspects-count")(suspects.count())
+    val nSuspects = suspects.count()
     if (nSuspects > 10000000L) return None
     val sKeys = keyed(suspects).select("__sk", "__pk", "__ok")
 
     // ---- re-derive suspects from (explicit ∪ non-suspect inferred), NEW schema
-    val lostKeys = if (nSuspects == 0) sKeys else t("rederive+lost") {
+    val lostKeys = if (nSuspects == 0) sKeys else {
       val keptInf = keyed(inf)
         .join(broadcast(sKeys), Seq("__sk", "__pk", "__ok"), "left_anti")
         .drop("__sk", "__pk", "__ok")
@@ -1290,8 +1263,8 @@ object Rdfs {
       // accumulated layers live across ALL partitions, so compaction folds the
       // whole inferred branch once (delta-bounded layers over pruned scans);
       // one materialization per ~6 mutations, amortized O(inferred)/6
-      else exp.unionByName(t("commit-compact")(graft.engine.DfOps.freshLeaf(
-        tombstoned(inf))))
+      else exp.unionByName(graft.engine.DfOps.freshLeaf(
+        tombstoned(inf)))
     // promotion: removed rows that remain derivable come back as Inferred
     // (novelty against the post-loss store keeps explicit copies
     // authoritative). Presence is checked delta-side: the p_id-pruned store
@@ -1426,13 +1399,12 @@ object Rdfs {
     // substituting member facts routinely touches ~100 predicates and must
     // keep the layout's pruned scans) or the store has no layout.
     val laidOut: Option[GraftStore] = next.layoutOpt.flatMap { lay =>
-      val touchedRows = t("touched-pids")(
-        lostKeys.select(col("__pk"))
+      val touchedRows = lostKeys.select(col("__pk"))
           .unionByName(addedKeys.select(col("__pk")))
           .unionByName(promStmts.select(col("p_id").as("__pk")))
           .unionByName(freshStmts.map(_.select(col("p_id").as("__pk")))
             .getOrElse(promStmts.select(col("p_id").as("__pk")).limit(0)))
-          .distinct().limit(257).collect())
+          .distinct().limit(257).collect()
       if (touchedRows.length > 256) None
       else if (touchedRows.isEmpty) Some(next)
       else {

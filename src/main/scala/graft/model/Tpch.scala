@@ -151,9 +151,6 @@ object Tpch {
     */
   private val registry = scala.collection.concurrent.TrieMap.empty[String, GraftStore]
 
-  /** Drop cached stores (diagnostics: force a fresh cold build in-process). */
-  def dropRegistry(): Unit = registry.clear()
-
   /** Bump whenever Term encoding / the triples mapping changes — invalidates the
     * cached parquet stores (stale xxhash ids otherwise survive across sessions).
     */

@@ -21,7 +21,7 @@ object Events {
     * LONG (legacy nanosAsLong) in older testdata, plain TIMESTAMP[µs] in newer. Both
     * normalize to the same µs value space here so event operators (and their DuckDB
     * `epoch_us(ts)` oracles) are physical-type-independent. This is THE canonical
-    * copy — SparkEntry / Dev / streaming all route through it. Integer `div` on the
+    * copy — SparkEntry and streaming route through it. Integer `div` on the
     * long path: a double-rounded /1000 loses low bits at 1e18.
     */
   def tsEpochUs(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column =

@@ -93,7 +93,7 @@ object FedTck {
       "disabled in TestFederatedQuery.java:592-609 (worked around as test13b)"))
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Dev.session(8)
+    val spark = graft.LocalSpark.session()
     val filter = args.headOption.getOrElse("")
     val outcomes = run(spark, filter)
     val byStatus = outcomes.groupBy(_.status).view.mapValues(_.size).toMap

@@ -29,7 +29,7 @@ object RefTck {
   final case class Outcome(name: String, status: String, detail: String = "")
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Dev.session(8)
+    val spark = graft.LocalSpark.session()
     val filter = args.headOption.getOrElse("")
     val outcomes = run(spark, filter)
     val byStatus = outcomes.groupBy(_.status).view.mapValues(_.size).toMap

@@ -229,7 +229,7 @@ object SubTck {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Dev.session(8)
+    val spark = graft.LocalSpark.session()
     val outcomes = run(spark, args.headOption.getOrElse(""))
     println("SUBTCK-SUMMARY " + outcomes.groupBy(_.status).view.mapValues(_.size).toMap
       .toSeq.sortBy(_._1).map { case (s, n) => s"$s=$n" }.mkString(" "))

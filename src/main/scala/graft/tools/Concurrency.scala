@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Concurrent-client throughput against the HTTP endpoint — the analog of the
   * reference's published BSBM figure (~2,300 query-mixes/hour at 100M triples
   * with 4 concurrent clients, `bigdata/src/releases/RELEASE_0.82b.txt:32`).
@@ -29,18 +27,7 @@ object Concurrency {
     // comma list characterizes the saturation curve (e.g. "2,4,8")
     val clientCounts = args.lift(1).getOrElse("4").split(",").map(_.trim.toInt).toSeq
     val mixesPer = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-concurrency")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("GRAFT_SCHED", "FAIR")) // FIFO for the A/B control
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     val store = graft.model.Tpch.store(spark, sfDir)
     val nStmts = store.statements.count()
     val server = new graft.server.SparqlServer(store).start()

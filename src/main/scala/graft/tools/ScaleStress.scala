@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: amplify the sf0.1 tables K× with FK-consistent key
@@ -18,23 +18,10 @@ object ScaleStress {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val base = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val out = s"/tmp/graft-scale/x$k"
-    val spark = SparkSession.builder()
-      // SPARK_GRAFT_CPUS honored like Bench: the x10 scaling read needs a
-      // low-core control run against the same warm amplified store
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      // amplified builds stage SERIALIZED when scratch is tight (Tpch.store);
-      // compress those blocks too — term-struct rows compress several-fold
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // amplified builds stage SERIALIZED when scratch is tight (Tpch.store);
+    // compress those blocks too — term-struct rows compress several-fold
+    sys.props("spark.rdd.compress") = "true"
+    val spark = graft.LocalSpark.session()
     def t(name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime(); f
       val s = (System.nanoTime() - t0) / 1e9

@@ -17,38 +17,10 @@ object TmAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nDel = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-tmab")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     if (args.contains("mega")) { megaPhase(spark, sfDir); spark.stop(); return }
 
-    // wall-clock plus TOTAL INPUT RECORDS read by all tasks in the section —
-    // the scale-invariant cost: single-node wall-clock under-represents the
-    // cluster gap, but rows-scanned is the quantity that multiplies by 10⁶ at
-    // 100 TB
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-      })
-    def time[A](f: => A): (A, Double, Long) = {
-      val t0 = System.nanoTime()
-      val r0 = recordsRead.get()
-      val r = f
-      Thread.sleep(300) // let the listener bus drain task-end events
-      (r, (System.nanoTime() - t0) / 1e9, recordsRead.get() - r0)
-    }
+    def time[A](f: => A): (A, Double, Long) = timed(spark)(f)
 
     // at-rest closed store: closure saved as p_id-partitioned parquet and
     // reopened — the 100 TB posture where entailments live in storage and every
@@ -138,7 +110,7 @@ object TmAB {
     // a store whose custIds(1) c_name row is still present — rebuild without
     // GRAFT_TMAB_REUSE after a prior textonly run
     if (args.contains("textonly")) {
-      textProbe(spark, atRestPath, custIds(1), f => time(f))
+      textProbe(spark, atRestPath, custIds(1))
       spark.stop()
       return
     }
@@ -307,8 +279,22 @@ object TmAB {
     }
 
     // ---- derived-index maintenance probe (TMAB-TEXT) ----
-    textProbe(spark, atRestPath, custIds(1), f => time(f))
+    textProbe(spark, atRestPath, custIds(1))
     spark.stop()
+  }
+
+  /** Wall-clock plus the TOTAL INPUT RECORDS read by the section's tasks —
+    * the scale-invariant cost: single-node wall-clock under-represents the
+    * cluster gap, but rows-scanned is the quantity that multiplies by 10⁶ at
+    * 100 TB.
+    */
+  def timed[A](spark: SparkSession)(f: => A): (A, Double, Long) = {
+    val ((r, sec), m) = JobMeter.measure(spark) {
+      val t0 = System.nanoTime()
+      val r = f
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    (r, sec, m.recordsRead.sum())
   }
 
   /** Derived-index maintenance probe: after a durable commit, the text-index
@@ -320,8 +306,8 @@ object TmAB {
     * session by ANY query work, not text-specific) is timed separately so the
     * A/B attributes honestly.
     */
-  def textProbe(spark: SparkSession, atRestPath: String, k: Long,
-                time: (=> Any) => (Any, Double, Long)): Unit = {
+  def textProbe(spark: SparkSession, atRestPath: String, k: Long): Unit = {
+    def time[A](f: => A): (A, Double, Long) = timed(spark)(f)
     val lexDir = atRestPath + "-lexicon"
     val st0 = new graft.model.GraftStore(spark,
       graft.model.GraftStore.load(spark, atRestPath).statements,
@@ -334,23 +320,20 @@ object TmAB {
     val mut = graft.engine.Update(st0,
       s"""DELETE DATA { <urn:t:customer:$k> <urn:p:c_name> "Customer#${"%09d".format(k)}" . } ;
         |INSERT DATA { <urn:doc:tmab1> <urn:p:c_comment> "tmab probe quixotic zephyr text" . }""".stripMargin)
-    val (re0, tSave, rSave) = time {
+    val (reopened, tSave, rSave) = time {
       graft.model.GraftStore.saveInPlace(mut, atRestPath)
     }
-    val reopened = re0.asInstanceOf[graft.model.GraftStore]
     // shared dictionary fold: any post-commit query pays this once per
     // session regardless of text search
     val (_, tLex, rLex) = time(reopened.nodeTerms.count())
-    val (idx0, tWarm, rWarm) = time {
+    val (idx, tWarm, rWarm) = time {
       val i = graft.search.TextIndex.forStore(reopened)
       i.postings.count(); i.lits.count(); i
     }
-    val idx = idx0.asInstanceOf[graft.search.TextIndex]
-    val (fresh0, tFull, rFull) = time {
+    val (fresh, tFull, rFull) = time {
       val b = graft.search.TextIndex.build(reopened)
       b.postings.count(); b.lits.count(); b
     }
-    val fresh = fresh0.asInstanceOf[graft.search.TextIndex]
     val key = (df: org.apache.spark.sql.DataFrame) =>
       df.select(col("token"), col("lit_id"), round(col("weight"), 12))
     val mismatch = key(idx.postings).exceptAll(key(fresh.postings)).count() +
@@ -371,23 +354,10 @@ object TmAB {
     * class whose all-pairs closure exceeds the 2M-pair driver bound, layered
     * over the full sf corpus — the case that ALWAYS recomputed before the
     * distributed class diff. A/Bs one edge delete (class split)
-    * delta-vs-recompute; self-contained (own listener/timer).
+    * delta-vs-recompute.
     */
   def megaPhase(spark: SparkSession, sfDir: String): Unit = {
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-      })
-    def time[A](f: => A): (A, Double, Long) = {
-      val t0 = System.nanoTime()
-      val r0 = recordsRead.get()
-      val r = f
-      Thread.sleep(300)
-      (r, (System.nanoTime() - t0) / 1e9, recordsRead.get() - r0)
-    }
+    def time[A](f: => A): (A, Double, Long) = timed(spark)(f)
     def keySet(st: graft.model.GraftStore) = st.statements
       .select(xxhash64(col("s")("id"), col("p")("id"), col("o")("id"),
         coalesce(col("g")("id"), lit(0L)), col("stype")).as("k"))

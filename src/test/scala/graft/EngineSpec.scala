@@ -170,4 +170,67 @@ class EngineSpec extends GraftSuite {
     val kinds = df.collect().map(r => r.getStruct(0).getAs[Byte]("kind"))
     assert(kinds.toSeq == Seq(0, 2, 2)) // IRI < literals
   }
+
+  test("ORDER BY + LIMIT over a filtered star matches SQL") {
+    val got = Engine.query(store,
+      """SELECT ?n ?b WHERE { ?c a <urn:c:Customer> ; <urn:p:c_acctbal> ?b ; <urn:p:c_name> ?n .
+        |  FILTER(?b > 1000) } ORDER BY ?n LIMIT 10""".stripMargin)
+      .collect().map(r => (r.getStruct(0).getAs[String]("str"), r.getStruct(1).getAs[Double]("num")))
+    val exp = spark.sql(
+      "SELECT c_name, c_acctbal FROM customer WHERE c_acctbal > 1000 ORDER BY c_name LIMIT 10")
+      .collect().map(r => (r.getString(0), r.getDouble(1)))
+    assert(got.length == 10 && got.toSeq == exp.toSeq)
+  }
+
+  test("an always-false FILTER and a type-error FILTER both yield no rows") {
+    assert(Engine.query(store,
+      "SELECT ?n WHERE { ?c a <urn:c:Customer> ; <urn:p:c_acctbal> ?b . FILTER(?b > 1.0E12) }").count() == 0)
+    // a string compared with a number is a type error, and an error is false
+    assert(Engine.query(store,
+      "SELECT ?n WHERE { ?c a <urn:c:Customer> ; <urn:p:c_name> ?n . FILTER(?n > 5) }").count() == 0)
+  }
+
+  test("malformed text, an unregistered SERVICE and bds: without bds:search fail cleanly") {
+    val parse = intercept[Exception](Engine.query(store, "SELECT ?x WHERE { ?x <urn:p:broken "))
+    assert(parse.getMessage.contains("unterminated IRI"))
+    val svc = intercept[Exception](Engine.query(store,
+      "SELECT ?x WHERE { SERVICE <urn:svc:nope> { ?x ?p ?o } }").count())
+    assert(svc.getMessage.contains("urn:svc:nope"))
+    val bds = intercept[Exception](Engine.query(store,
+      "SELECT ?x WHERE { ?x <http://www.bigdata.com/rdf/search#relevance> ?r }").count())
+    assert(bds.getMessage.contains("bds:search"))
+  }
+
+  test("DELETE DATA of an absent statement is a no-op") {
+    val after = graft.engine.Update(store, "DELETE DATA { <urn:no:such> <urn:p:x> 1 . }")
+    assert(after.statements.count() == store.statements.count())
+  }
+
+  test("flagship entry: path join + group matches SQL") {
+    val got = SparkEntry.entry(spark).collect()
+      .map(r => (r.getString(0), r.getAs[Number](1).longValue)).toSet
+    val exp = spark.sql(
+      """SELECT n_name, COUNT(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name""".stripMargin).collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(got.nonEmpty && got == exp)
+  }
+
+  test("JobMeter counts the calling thread's jobs and not another thread's") {
+    import graft.tools.JobMeter
+    val q = "SELECT (COUNT(*) AS ?n) WHERE { ?c a <urn:c:Customer> ; <urn:p:c_acctbal> ?b }"
+    Engine.query(store, q).count() // warm the store's lazily probed metadata
+    val (_, alone) = JobMeter.measure(spark)(Engine.query(store, q).count())
+    assert(alone.jobs.sum() > 0 && alone.tasks.sum() > 0 && alone.recordsRead.sum() > 0)
+    // another thread runs a job inside the metered window, under its own meter
+    var other: JobMeter = null
+    val t = new Thread(() => other = JobMeter.measure(spark)(spark.range(0, 1000, 1, 13).count())._2)
+    val (_, m) = JobMeter.measure(spark) {
+      t.start(); t.join()
+      Engine.query(store, q).count()
+    }
+    assert(other.tasks.sum() >= 13)
+    assert((m.jobs.sum(), m.tasks.sum(), m.recordsRead.sum()) ==
+      (alone.jobs.sum(), alone.tasks.sum(), alone.recordsRead.sum()))
+  }
 }

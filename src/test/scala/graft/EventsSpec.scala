@@ -61,4 +61,11 @@ class EventsSpec extends GraftSuite {
     val r = TextStats.redactPii(d, "doc_id", "text").first().getString(1)
     assert(r == "mail [EMAIL] and [IP] and [PHONE] end")
   }
+
+  test("sessionize over the generated event log covers every event exactly once") {
+    val ev0 = table("events")
+    val ev = ev0.withColumn("ts_us", Events.tsEpochUs(ev0.schema("ts").dataType))
+    val sess = Events.sessionize(ev, "user_id", "ts_us", gapSec = 1800, tsPerSec = 1000000L)
+    assert(sess.agg(sum("n_events")).first().getLong(0) == ev0.count())
+  }
 }

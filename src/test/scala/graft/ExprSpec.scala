@@ -2,6 +2,7 @@ package graft
 
 import graft.engine.Engine
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
 /** SPARQL function-library semantics, evaluated end-to-end through the engine on the
   * unit solution (the per-function IVValueExpression test analog).
@@ -170,5 +171,148 @@ class ExprSpec extends GraftSuite {
     // boolean EBV of plain strings
     assert(str1("""IF("nonempty", "t", "f")""") == "t")
     assert(str1("""IF("", "t", "f")""") == "f")
+  }
+
+  // ---- differential probes: each query with its expected result rows ----
+
+  /** Result rows as ` | `-joined terms (xsd datatypes abbreviated, "" unbound). */
+  private def rows(q: String, st: graft.model.GraftStore = store): Seq[String] =
+    graft.engine.SparqlResults.toTsv(Engine.query(st, q)).split("\n", -1).toSeq.tail.init
+      .map(_.replaceAll("\\^\\^<http://www.w3.org/2001/XMLSchema#(\\w+)>", "^^xsd:$1")
+        .replace("\t", " | "))
+
+  /** Runs each (label, query, expected rows) probe — `ordered` compares row
+    * order too — and reports every mismatch at once.
+    */
+  private def probes(cases: Seq[(String, String, Seq[String])], ordered: Set[String] = Set()): Unit = {
+    val bad = cases.flatMap { case (label, q, want) =>
+      val got = rows(q)
+      val ok = if (ordered(label)) got == want else got.sorted == want.sorted
+      if (ok) None else Some(s"$label: got $got, want $want")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  private val I = "^^xsd:integer"
+  private val T = "\"true\"^^xsd:boolean"
+
+  test("probes: aggregates, modifiers, scoping and templates") {
+    probes(Seq(
+      ("SUM-PROMOTE", "SELECT (SUM(?v) AS ?s) WHERE { VALUES ?v { 1 2.5 } }",
+        Seq("\"3.5\"^^xsd:decimal")),
+      ("SUM-DBL-MIX", "SELECT (SUM(?v) AS ?s) WHERE { VALUES ?v { 1 1.5e0 } }",
+        Seq("\"2.5\"^^xsd:double")),
+      ("GROUP-UNBOUND", "SELECT ?g (COUNT(*) AS ?c) WHERE { { BIND(1 AS ?x) } UNION { BIND(1 AS ?g) } } GROUP BY ?g",
+        Seq(s""" | "1"$I""", s""""1"$I | "1"$I""")),
+      ("ORDER-UNBOUND", "SELECT ?v WHERE { { BIND(2 AS ?v) } UNION { BIND(1 AS ?x) } } ORDER BY ?v",
+        Seq("", s""""2"$I""")),
+      ("OFFSET-BEYOND", "SELECT ?v WHERE { VALUES ?v { 1 2 } } OFFSET 10", Seq()),
+      ("HAVING-NOGRP", "SELECT (SUM(?v) AS ?s) WHERE { VALUES ?v { 1 2 } } HAVING (SUM(?v) > 2)",
+        Seq(s""""3"$I""")),
+      ("HAVING-NOGRP2", "SELECT (SUM(?v) AS ?s) WHERE { VALUES ?v { 1 2 } } HAVING (SUM(?v) > 5)", Seq()),
+      ("COUNT-DIST-*", "SELECT (COUNT(DISTINCT *) AS ?c) WHERE { { BIND(1 AS ?x) } UNION { BIND(1 AS ?x) } }",
+        Seq(s""""1"$I""")),
+      // an unbound template variable or a literal subject drops the triple
+      ("CONSTRUCT-UNB", "CONSTRUCT { ?s <urn:p:x> ?nope } WHERE { VALUES ?s { <urn:a> } }", Seq()),
+      ("CONSTRUCT-LIT", "CONSTRUCT { ?lit <urn:p:x> 1 } WHERE { VALUES ?lit { \"str\" } }", Seq()),
+      // language tags compare case-insensitively
+      ("LANG-CASE", "SELECT (sameTerm(\"x\"@EN, \"x\"@en) AS ?s) ((\"x\"@EN = \"x\"@en) AS ?e) WHERE {}",
+        Seq(s"$T | $T")),
+      ("MINUS-NOSHARE", "SELECT ?v WHERE { VALUES ?v { 1 } MINUS { VALUES ?w { 1 } } }", Seq(s""""1"$I""")),
+      // the inner ?w is not projected, so nothing joins on it
+      ("SUBQ-SCOPE", "SELECT ?v ?w WHERE { VALUES ?w { 9 } { SELECT ?v WHERE { VALUES (?v ?w) { (1 2) } } } }",
+        Seq(s""""1"$I | "9"$I""")),
+      ("AGG-CONSTANT", "SELECT (1 + COUNT(*) AS ?c) WHERE { VALUES ?v { 7 8 } }", Seq(s""""3"$I""")),
+      ("SAMPLE-DET", "SELECT (SAMPLE(?v) AS ?s) WHERE { VALUES ?v { 4 } }", Seq(s""""4"$I""")),
+      // a second BIND of a bound variable acts as a join condition
+      // (the reference's ConditionalBind): unequal values drop the solution
+      ("BIND-AFTER", "SELECT ?x WHERE { BIND(1 AS ?x) BIND(2 AS ?x) }", Seq()),
+      ("BIND-AFTER-EQ", "SELECT ?x WHERE { BIND(1 AS ?x) BIND(1 AS ?x) }", Seq(s""""1"$I""")),
+      ("UNION-SCOPE", "SELECT ?a WHERE { { BIND(1 AS ?a) } UNION { BIND(2 AS ?a) } FILTER(?a = 1) }",
+        Seq(s""""1"$I""")),
+      ("SUM-EMPTY", "SELECT (SUM(?v) AS ?s) (COUNT(?v) AS ?c) (GROUP_CONCAT(?v) AS ?g) WHERE { VALUES ?v { 1 } FILTER(false) }",
+        Seq(s""""0"$I | "0"$I | """"")),
+      // MIN over no rows is an error (unbound); AVG over no rows is 0
+      ("MINMAX-EMPTY", "SELECT (MIN(?v) AS ?a) (AVG(?v) AS ?b) WHERE { VALUES ?v { 1 } FILTER(false) }",
+        Seq(s""" | "0"$I""")),
+      ("COUNT-VAR", "SELECT (COUNT(?y) AS ?c) (COUNT(*) AS ?a) WHERE { { BIND(1 AS ?x) } UNION { BIND(2 AS ?y) } }",
+        Seq(s""""1"$I | "2"$I""")),
+      ("VALUES-UNDEF", "SELECT ?x ?y WHERE { VALUES (?x ?y) { (1 UNDEF) } BIND(7 AS ?z) }", Seq(s""""1"$I | """)),
+      ("UNDEF-JOIN", "SELECT ?a ?b WHERE { VALUES (?a ?b) { (1 2) (2 9) } VALUES (?a ?b) { (1 UNDEF) } }",
+        Seq(s""""1"$I | "2"$I""")),
+      ("NOTEX-CORR", "SELECT ?v WHERE { VALUES ?v { 1 2 } FILTER NOT EXISTS { VALUES ?v { 1 } } }",
+        Seq(s""""2"$I""")),
+      ("ORDER-TYPES", "SELECT ?v WHERE { VALUES ?v { \"lit\" <urn:iri> } } ORDER BY ?v",
+        Seq("<urn:iri>", "\"lit\"")),
+      ("BNODE-PERSOL", "SELECT (COUNT(DISTINCT ?b) AS ?c) WHERE { { BIND(1 AS ?x) } UNION { BIND(2 AS ?x) } BIND(BNODE() AS ?b) }",
+        Seq(s""""2"$I""")),
+      ("NOW-CONST", "SELECT (COUNT(DISTINCT ?n) AS ?c) WHERE { { BIND(1 AS ?x) } UNION { BIND(2 AS ?x) } BIND(NOW() AS ?n) }",
+        Seq(s""""1"$I"""))
+    ), ordered = Set("ORDER-UNBOUND", "ORDER-TYPES"))
+    intercept[Exception](rows("SELECT (SUM(COUNT(*)) AS ?x) WHERE { VALUES ?v { 1 } }")) // nested aggregate
+    assert(Set(Seq("\"a|b\""), Seq("\"b|a\"")).contains(
+      rows("SELECT (GROUP_CONCAT(?v; SEPARATOR=\"|\") AS ?g) WHERE { VALUES ?v { \"a\" \"b\" } }")))
+    // exact decimals: a typed, a bare and an integer value
+    val ds = graft.engine.Update(store,
+      """INSERT DATA { <urn:acct:1> <urn:p:delta> "0.10"^^<http://www.w3.org/2001/XMLSchema#decimal> .
+        |  <urn:acct:2> <urn:p:delta> 0.2 .
+        |  <urn:acct:3> <urn:p:delta> 1 . }""".stripMargin)
+    assert(rows("SELECT (SUM(?d) AS ?s) (AVG(?d) AS ?a) (SUM(?d)*10 AS ?s10) WHERE { ?x <urn:p:delta> ?d }", ds) ==
+      Seq("\"1.3\"^^xsd:decimal | \"0.433333333333333333\"^^xsd:decimal | \"13\"^^xsd:decimal"))
+  }
+
+  test("probes: functions, EBV and property paths") {
+    probes(Seq(
+      ("DT-CMP-DATE", "SELECT ((\"2024-01-02\"^^<http://www.w3.org/2001/XMLSchema#date> > \"2024-01-01\"^^<http://www.w3.org/2001/XMLSchema#date>) AS ?r) WHERE {}",
+        Seq(T)),
+      ("STR-IRI", "SELECT (STR(<urn:ab>) AS ?r) WHERE {}", Seq("\"urn:ab\"")),
+      ("ISNUM-STRLIT", "SELECT (isNumeric(\"5\") AS ?r) (isNumeric(5) AS ?t) WHERE {}",
+        Seq(s""""false"^^xsd:boolean | $T""")),
+      ("SUBSTR-1BASED", "SELECT (SUBSTR(\"foobar\", 4) AS ?a) (SUBSTR(\"foobar\", 4, 1) AS ?b) WHERE {}",
+        Seq("\"bar\" | \"b\"")),
+      ("SUBSTR-LANG", "SELECT (SUBSTR(\"foobar\"@en, 4) AS ?a) WHERE {}", Seq("\"bar\"@en")),
+      ("STRBEFORE", "SELECT (STRBEFORE(\"abc\",\"b\") AS ?a) (STRBEFORE(\"abc\",\"xyz\") AS ?b) (STRAFTER(\"abc\",\"\") AS ?c) WHERE {}",
+        Seq("\"a\" | \"\" | \"abc\"")),
+      // incompatible language tags are an error: unbound
+      ("STRBEFORE-LANG", "SELECT (STRBEFORE(\"abc\"@en,\"b\") AS ?a) (STRAFTER(\"abc\"@en,\"b\"@cy) AS ?b) WHERE {}",
+        Seq("\"a\"@en | ")),
+      ("STRSTARTS-LANG", "SELECT (STRSTARTS(\"foobar\"@en,\"foo\"@en) AS ?a) (STRSTARTS(\"foo\"@en,\"f\"@cy) AS ?b) WHERE {}",
+        Seq(s"$T | ")),
+      ("REPLACE-GRP", "SELECT (REPLACE(\"abcd\",\"(b)(c)\",\"$2$1\") AS ?r) WHERE {}", Seq("\"acbd\"")),
+      ("ENCODE-URI", "SELECT (ENCODE_FOR_URI(\"Los Angeles\") AS ?r) WHERE {}", Seq("\"Los%20Angeles\"")),
+      ("STRDT-LANG", "SELECT (STRDT(\"x\"@en, <http://www.w3.org/2001/XMLSchema#string>) AS ?a) (STRLANG(\"chat\",\"en\") AS ?b) WHERE {}",
+        Seq(" | \"chat\"@en")),
+      ("UCASE-LANG", "SELECT (UCASE(\"ab\"@en) AS ?a) WHERE {}", Seq("\"AB\"@en")),
+      // integer / integer is xsd:decimal
+      ("INT-DIVIDE", "SELECT (1/2 AS ?a) (datatype(1/2) AS ?dt) WHERE {}",
+        Seq("\"0.5\"^^xsd:decimal | <http://www.w3.org/2001/XMLSchema#decimal>")),
+      ("UNARY-MINUS", "SELECT (-(\"5\"^^<http://www.w3.org/2001/XMLSchema#integer>) AS ?a) WHERE {}",
+        Seq(s""""-5"$I""")),
+      ("SECONDS-FRAC", "SELECT (SECONDS(\"2024-01-01T01:02:03.5Z\"^^<http://www.w3.org/2001/XMLSchema#dateTime>) AS ?s) WHERE {}",
+        Seq("\"3.5\"^^xsd:decimal")),
+      // dateTimes are stored normalized to UTC, as the reference stores them
+      ("TZ-FN", "SELECT (TZ(\"2024-01-01T00:00:00Z\"^^<http://www.w3.org/2001/XMLSchema#dateTime>) AS ?a) (TZ(\"2024-01-01T00:00:00\"^^<http://www.w3.org/2001/XMLSchema#dateTime>) AS ?b) WHERE {}",
+        Seq("\"Z\" | \"Z\"")),
+      ("IRI-IDEMP", "SELECT (IRI(<urn:x>) AS ?a) WHERE {}", Seq("<urn:x>")),
+      ("COALESCE-MIX", "SELECT (COALESCE(?nope, 1/0, 5) AS ?a) WHERE {}", Seq(s""""5"$I""")),
+      ("IF-ERR-COND", "SELECT (IF(1/0, 1, 2) AS ?a) WHERE {}", Seq("")),
+      ("EBV-STRINGS", "SELECT (IF(\"\", 1, 0) AS ?a) (IF(\"0\", 1, 0) AS ?b) (IF(\"false\", 1, 0) AS ?c) WHERE {}",
+        Seq(s""""0"$I | "1"$I | "1"$I""")),
+      ("EBV-NAN", "SELECT (IF(\"NaN\"^^<http://www.w3.org/2001/XMLSchema#double>, 1, 0) AS ?a) WHERE {}",
+        Seq(s""""0"$I"""))
+    ))
+    // nation 3's region, from the raw table: the paths below must agree with it
+    val inRegion3 = table("nation")
+      .filter(col("n_nationkey") === 3).select("n_regionkey").first().getAs[Number](0).intValue == 3
+    assert(rows("ASK { <urn:t:nation:3> (<urn:fk:n_regionkey>)+ <urn:t:region:3> }") == Seq(inRegion3.toString))
+    // `/` binds tighter than `|`
+    assert(rows("ASK { <urn:t:nation:3> <urn:p:none>/<urn:p:none>|<urn:fk:n_regionkey> <urn:t:region:3> }") ==
+      Seq(inRegion3.toString))
+    // zero-length match of a negated property set, plus one neighbour
+    val neg0 = rows("SELECT ?o WHERE { <urn:t:nation:3> !(<urn:p:none>)? ?o } LIMIT 2")
+    assert(neg0.size == 2 && neg0.contains("<urn:t:nation:3>"), neg0)
+    // r ^fk/fk r round-trips for a region r
+    val inv = rows("SELECT ?x WHERE { ?x ^<urn:fk:n_regionkey>/<urn:fk:n_regionkey> ?x } LIMIT 1")
+    assert(inv.size == 1 && inv.head.matches("<urn:t:region:\\d+>"), inv)
   }
 }

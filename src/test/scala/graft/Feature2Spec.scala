@@ -52,23 +52,23 @@ class Feature2Spec extends GraftSuite {
     import graft.model.GraftStore
     import graft.engine.TermIds
     GraftStore.saveBucketed(store.statements, "graft_bucketed_test", 8)
-    val t = spark.table("graft_bucketed_test")
-    val a = t.filter(col("p_id") === TermIds.iriId("urn:p:c_name"))
-      .select(col("s_id"), col("o").as("name"))
-    val b = t.filter(col("p_id") === TermIds.iriId("urn:p:c_acctbal"))
-      .select(col("s_id"), col("o").as("bal"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // a private session: the broadcast threshold below must not leak into the
+    // shared session other suites are using concurrently
+    val own = spark.newSession()
+    own.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
+      val t = own.table("graft_bucketed_test")
+      val a = t.filter(col("p_id") === TermIds.iriId("urn:p:c_name"))
+        .select(col("s_id"), col("o").as("name"))
+      val b = t.filter(col("p_id") === TermIds.iriId("urn:p:c_acctbal"))
+        .select(col("s_id"), col("o").as("bal"))
       val joined = a.join(b, "s_id")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"expected shuffle-free bucketed join, got:\n$plan")
       val custRows = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").count()
       assert(joined.count() == custRows)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_test")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS graft_bucketed_test")
   }
 
   test("property graph facade: vertices, edges, traversal, values") {

@@ -192,4 +192,19 @@ class GeoServiceSpec extends GraftSuite {
     val r = df.select(col("x")("str"), col("x")("dt")).first()
     assert(r.getString(0) == "7#8" && r.getString(1) == "urn:dt:custom")
   }
+
+  test("a packed literal with fewer components than the custom fields is skipped") {
+    val st = Update(store,
+      """PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>
+        |INSERT DATA { <urn:cfv:x> <urn:p:pos6> "2#3#0#7#0.5"^^geo:geoSpatialLiteral .
+        |  <urn:cfv:bad> <urn:p:pos6> "1#1"^^geo:geoSpatialLiteral . }""".stripMargin)
+    val cv = Engine.query(st,
+      """PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>
+        |SELECT ?cv WHERE { ?r geo:search "inRectangle" ; geo:predicate <urn:p:pos6> ;
+        |  geo:spatialRectangleSouthWest "0#0" ; geo:spatialRectangleNorthEast "5#5" ;
+        |  geo:customFields "sev#conf" ; geo:customFieldsLowerBounds "0#0" ;
+        |  geo:customFieldsValues ?cv }""".stripMargin)
+      .select(col("cv")("str")).collect().map(_.getString(0)).toSeq
+    assert(cv == Seq("7#0.5"))
+  }
 }

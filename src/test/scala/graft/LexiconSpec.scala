@@ -44,4 +44,20 @@ class LexiconSpec extends GraftSuite {
     assert(graft.sparql.Parser.parseDateTime("2024-01-17T10:56:23.480+00:00")
       == "2024-01-17T10:56:23.480+00:00")
   }
+
+  test("a store rebuilt at the same lexicon path is not served the old lexicon") {
+    import graft.model.{GraftStore, Term}
+    val lexP = s"/tmp/graft-lexgen-${java.util.UUID.randomUUID()}-lexicon"
+    def tiny(o: String) = GraftStore.assemble(spark.range(1).select(
+      Term.iri("urn:lg:s").as("s"), Term.iri("urn:lg:p").as("p"), Term.iri(o).as("o"),
+      Term.nullTerm.as("g"), lit(GraftStore.STYPE_EXPLICIT).as("stype")))
+    def rmLex(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lexP))
+    def has(st: GraftStore, iri: String) = st.nodeTerms.filter(col("n")("str") === iri).count()
+    try {
+      assert(has(new GraftStore(spark, tiny("urn:lg:OLD"), Some(lexP)), "urn:lg:OLD") == 1)
+      rmLex() // the namespace is dropped and recreated at the same path
+      val b = new GraftStore(spark, tiny("urn:lg:NEW"), Some(lexP))
+      assert(has(b, "urn:lg:NEW") == 1 && has(b, "urn:lg:OLD") == 0)
+    } finally rmLex()
+  }
 }

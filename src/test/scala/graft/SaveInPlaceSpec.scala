@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * full-recompute result.
   */
 class SaveInPlaceSpec extends AnyFunSuite {
-  lazy val spark = Dev.session(8)
+  lazy val spark = SharedSpark.spark
 
   val RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 

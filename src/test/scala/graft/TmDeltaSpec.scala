@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Inferred when the copy is deleted but it stays derivable).
   */
 abstract class TmDeltaScenarios(part: Int, of: Int) extends AnyFunSuite {
-  lazy val spark = Dev.session(8)
+  lazy val spark = SharedSpark.spark
 
   /** Register every scenario once, but materialize only this class's modulo
     * slice as ScalaTest cases: the file's 77 scenarios total ~43 min of

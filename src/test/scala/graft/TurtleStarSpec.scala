@@ -60,4 +60,28 @@ class TurtleStarSpec extends GraftSuite {
     val ps = df.select(col("p")("str")).collect().map(_.getString(0)).toSet
     assert(ps == Set("http://purl.org/dc/terms/source", "http://purl.org/dc/terms/created"))
   }
+
+  test("sid lookup over annotated nation names matches the raw table") {
+    val nat = table("nation")
+      .select("n_nationkey", "n_name").collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getString(1))).sortBy(_._1)
+    val data = nat.map { case (k, nm) =>
+      s"""<urn:n:$k> <urn:p:name> "$nm" .
+         |<< <urn:n:$k> <urn:p:name> "$nm" >> <urn:p:src> <urn:s:tpch> ;
+         |   <urn:p:key> $k .""".stripMargin
+    }.mkString("\n")
+    val st = new GraftStore(spark, Rio.readTurtle(spark, data).localCheckpoint())
+    // `?k-10` is the variable ?k minus 10; ORDER BY a cast function call
+    val got = Engine.query(st,
+      """PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
+        |SELECT ?name ?k WHERE {
+        |  BIND(<< ?x <urn:p:name> ?name >> AS ?sid)
+        |  ?sid <urn:p:key> ?k .
+        |  FILTER(?k-10 >= 0)
+        |} ORDER BY xsd:integer(str(?k))""".stripMargin)
+      .select(col("name")("str"), col("k")("num").cast("long")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val want = nat.filter(_._1 >= 10).map { case (k, nm) => (nm, k) }.toSeq
+    assert(want.nonEmpty && got == want)
+  }
 }
