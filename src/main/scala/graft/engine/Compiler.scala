@@ -373,7 +373,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
   private def containsClosure(p: Path): Boolean = p match {
     case PZeroOrMore(_) | POneOrMore(_) => true
     case PInv(q) => containsClosure(q)
-    case PZeroOrOne(_) => true
+    case PZeroOrOne(_) | PZero(_) => true
     case PSeq(q, r) => containsClosure(q) || containsClosure(r)
     case PAlt(q, r) => containsClosure(q) || containsClosure(r)
     case _ => false
@@ -823,6 +823,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     case PZeroOrOne(q) =>
       val edges = pathPairIds(q, g).dropDuplicates("a", "b").localCheckpoint()
       pathVertexPairs(edges).unionByName(edges).dropDuplicates("a", "b")
+    case PZero(q) => pathVertexPairs(pathPairIds(q, g))
   }
 
   private def pathVertexPairs(edges: DataFrame): DataFrame =
@@ -860,7 +861,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     * graph-scoped node domain, which the seeded evaluation approximates globally).
     */
   private def containsZero(p: Path): Boolean = p match {
-    case PZeroOrMore(_) | PZeroOrOne(_) => true
+    case PZeroOrMore(_) | PZeroOrOne(_) | PZero(_) => true
     case PInv(q) => containsZero(q)
     case PSeq(q, r) => containsZero(q) && containsZero(r)
     case PAlt(q, r) => containsZero(q) || containsZero(r)
@@ -901,15 +902,21 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     case POneOrMore(q) =>
       seededClosureIds(q, g, seeds0, fromSubject, includeZero = false, seedsInDomain)
     case PZeroOrOne(q) =>
-      val inDom = if (seedsInDomain) seeds0
-        else seeds0.join(zeroDomainIds.withColumnRenamed("nid", "seed"), Seq("seed"))
-      val selfP = inDom.select(col("seed").as("a"), col("seed").as("b"))
-      selfP.unionByName(seededPathIds(q, g, seeds0, fromSubject, seedsInDomain))
+      seedSelfPairs(seeds0, seedsInDomain)
+        .unionByName(seededPathIds(q, g, seeds0, fromSubject, seedsInDomain))
         .dropDuplicates("a", "b")
+    case PZero(_) => seedSelfPairs(seeds0, seedsInDomain).dropDuplicates("a", "b")
     case PLink(_) | PNeg(_) =>
       val raw = pathPairIds(p, g)
       val key = if (fromSubject) "a" else "b"
       raw.join(seeds0.withColumnRenamed("seed", key), Seq(key)).select("a", "b")
+  }
+
+  /** Zero-length (seed, seed) pairs of the in-domain seeds. */
+  private def seedSelfPairs(seeds0: DataFrame, seedsInDomain: Boolean): DataFrame = {
+    val inDom = if (seedsInDomain) seeds0
+      else seeds0.join(zeroDomainIds.withColumnRenamed("nid", "seed"), Seq("seed"))
+    inDom.select(col("seed").as("a"), col("seed").as("b"))
   }
 
   /** BFS closure from a seed frontier (semi-naive, id space). */
@@ -957,6 +964,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     case PZeroOrMore(q) => pathPredIds(q)
     case POneOrMore(q) => pathPredIds(q)
     case PZeroOrOne(q) => pathPredIds(q)
+    case PZero(q) => pathPredIds(q)
   }
 
   /** id→term dictionary for re-attaching path endpoints. A load-time store serves its
@@ -990,7 +998,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     spark.range(1).select(lit(id).as("seed"))
 
   private def closureFree(p: Path): Boolean = p match {
-    case PZeroOrMore(_) | POneOrMore(_) | PZeroOrOne(_) => false
+    case PZeroOrMore(_) | POneOrMore(_) | PZeroOrOne(_) | PZero(_) => false
     case PInv(q) => closureFree(q)
     case PSeq(q, r) => closureFree(q) && closureFree(r)
     case PAlt(q, r) => closureFree(q) && closureFree(r)
@@ -2262,8 +2270,13 @@ object Engine {
       case other => Seq(other)
     }
 
-  def query(store: GraftStore, sparql: String): DataFrame = {
-    val q = Parser.parseQuery(sparql)
+  def query(store: GraftStore, sparql: String): DataFrame =
+    query(store, Parser.parseQuery(sparql))
+
+  /** Compile an already-parsed query (a caller that also inspects the AST,
+    * e.g. for the query form, parses once).
+    */
+  def query(store: GraftStore, q: Query): DataFrame = {
     val c = new Compiler(store, DatasetSpec.from(expandVirtual(store, q.datasets)))
     q match {
       case s: SelectQuery => c.compileSelect(s)

@@ -39,26 +39,36 @@ object DfOps {
     * has known super-linear planning cost on wide union fixpoint plans, so the
     * inference/update paths lose nothing by running without it.
     */
-  // refcounted: the flag lives on the SHARED session conf, and TM/update work
-  // now runs concurrently (parallel test suites, future concurrent mutations).
-  // A plain set/restore bracket would re-enable propagation while a sibling
-  // invocation is mid-checkpoint, re-poisoning its leaf. Restore only when the
-  // LAST concurrent invocation exits; `prev` is captured at first entry.
-  private val ncLock = new Object
-  private var ncDepth = 0
-  private var ncPrev: Option[String] = None
+  // refcounted PER SESSION: the flag lives on the session conf, which
+  // concurrent TM/update work shares (parallel test suites, concurrent
+  // mutations). A plain set/restore bracket would re-enable propagation while
+  // a sibling invocation is mid-checkpoint, re-poisoning its leaf. Restore only
+  // when the LAST concurrent invocation on that session exits; `prev` is
+  // captured at its first entry. Keyed by session, not process-wide: stores
+  // of different sizes run on different sessions (GraftStore.execSession),
+  // and a process-wide count would skip the set on the second session and
+  // restore the first session's value onto it. An entry lives only while an
+  // invocation on its session runs.
+  private val ncState =
+    scala.collection.mutable.HashMap.empty[org.apache.spark.sql.SparkSession, (Int, Option[String])]
   def noConstraints[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
     val k = "spark.sql.constraintPropagation.enabled"
-    ncLock.synchronized {
-      if (ncDepth == 0) { ncPrev = spark.conf.getOption(k); spark.conf.set(k, "false") }
-      ncDepth += 1
+    ncState.synchronized {
+      val (depth, prev) = ncState.getOrElse(spark, {
+        val p = spark.conf.getOption(k); spark.conf.set(k, "false"); (0, p)
+      })
+      ncState(spark) = (depth + 1, prev)
     }
     try f
-    finally ncLock.synchronized {
-      ncDepth -= 1
-      if (ncDepth == 0) ncPrev match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
+    finally ncState.synchronized {
+      val (depth, prev) = ncState(spark)
+      if (depth > 1) ncState(spark) = (depth - 1, prev)
+      else {
+        ncState.remove(spark)
+        prev match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        }
       }
     }
   }

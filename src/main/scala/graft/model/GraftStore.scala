@@ -559,10 +559,70 @@ object GraftStore {
       .write.mode("overwrite").partitionBy("p_id").parquet(path)
   }
 
-  def load(spark: SparkSession, path: String): GraftStore =
-    new GraftStore(spark, spark.read.parquet(path)
+  /** Open the at-rest store at `path` — the single at-rest open, and the one
+    * place a store's execution mode is chosen (`execSession`): the statements
+    * are read through the session that store runs on, and everything derived
+    * from the store (Compiler frames and probe jobs, Update, truth
+    * maintenance, the lexicon, the subject sidecar, SparqlServer) plans on
+    * `store.spark`. `withLexicon` attaches the persisted lexicon next to the
+    * statements (`path + "-lexicon"`).
+    */
+  def load(spark: SparkSession, path: String, withLexicon: Boolean = false): GraftStore = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    val s = execSession(spark, bytes)
+    new GraftStore(s, s.read.parquet(path)
       .select(columns.map(col): _*), // normalize column order; p_id read as partition col
+      lexiconPath = if (withLexicon) Some(path + "-lexicon") else None,
       atRestPath = Some(path))
+  }
+
+  /** At-rest statement bytes below which a store runs interpreted: no
+    * whole-stage codegen and no per-expression codegen. The compiler inlines
+    * term-id hashes and FILTER constants as Java literals, so nearly every
+    * request generates new classes, and Spark's codegen cache (100 entries,
+    * keyed by classloader and code) misses even on repeated texts; on a small
+    * store janino's compile time is most of a request. Interpreting wins at
+    * sf0.01 (22 MB of statements); at sf0.1 (227 MB) repeated shapes favour
+    * codegen, so the floor sits between the two (README §Execution mode).
+    */
+  val INTERPRETED_BELOW_BYTES: Long = 128L << 20
+
+  /** Interpreted sibling of each caller session, created once and held weakly
+    * (a sibling holds no reference to its parent).
+    */
+  private val interpretedSiblings =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  private def runsInterpreted(s: SparkSession): Boolean =
+    s.conf.getOption("spark.sql.codegen.wholeStage").contains("false") &&
+      s.conf.getOption("spark.sql.codegen.factoryMode").contains("NO_CODEGEN")
+
+  /** The session a store of `atRestBytes` at-rest statement bytes executes on:
+    * the caller's own at or above `INTERPRETED_BELOW_BYTES` (or when it already
+    * runs interpreted), else an interpreted sibling — `spark.newSession()` with
+    * the caller's runtime SQL conf copied in and both codegen paths off. The
+    * caller's conf is never written. Siblings share the SparkContext, the
+    * cache manager and the scheduler pools; a conf the caller sets after the
+    * sibling exists does not reach it.
+    */
+  private[graft] def execSession(spark: SparkSession, atRestBytes: Long): SparkSession =
+    if (atRestBytes >= INTERPRETED_BELOW_BYTES || runsInterpreted(spark)) spark
+    else interpretedSiblings.synchronized {
+      Option(interpretedSiblings.get(spark)).getOrElse {
+        val s = spark.newSession()
+        // runtime keys the caller set (a static or core key is the same in
+        // both sessions; setting one would throw)
+        val own = s.conf.getAll
+        spark.conf.getAll.foreach { case (k, v) =>
+          if (!own.get(k).contains(v)) scala.util.Try(s.conf.set(k, v)) }
+        s.conf.set("spark.sql.codegen.wholeStage", "false")
+        s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        interpretedSiblings.put(spark, s)
+        s
+      }
+    }
 
   /** Durable O(delta) commit of a MUTATED store back to its own at-rest path:
     * rewrite ONLY the partition directories the layout has replaced, leave
@@ -598,12 +658,7 @@ object GraftStore {
     val spark = store.spark
     val lexDir = path + "-lexicon"
     def deleteDerived(): Unit = dropDerived(spark, path)
-    def reopen(withLex: Boolean): GraftStore = {
-      val st = load(spark, path)
-      if (withLex) new GraftStore(spark, st.statements,
-        lexiconPath = Some(lexDir), atRestPath = Some(path))
-      else st
-    }
+    def reopen(withLex: Boolean): GraftStore = load(spark, path, withLex)
     val hadLex = parquetGen(lexDir) >= 0
     val touched = store.layoutOpt.map(_.segPids).getOrElse(Set.empty)
     if (!store.atRestPath.contains(path) || touched.isEmpty) {

@@ -231,11 +231,12 @@ object Tpch {
         }
         stmts.unpersist(false) // staging blocks are dead once the store is at rest
       }
+      // the open picks the session the store runs on (GraftStore.load);
+      // everything below plans on that session, not the caller's
+      val st = GraftStore.load(spark, path, withLexicon = true)
       // stores written before the subject access path existed get their
       // sidecar here, once, at open — never lazily inside a query
-      SubjectIndex.ensure(spark, path)
-      val st = new GraftStore(spark, GraftStore.load(spark, path).statements,
-        lexiconPath = Some(path + "-lexicon"), atRestPath = Some(path))
+      SubjectIndex.ensure(st.spark, path)
       st.nodeTerms // shared via the path-keyed cache after a cold load
       graft.search.TextIndex.forStore(st)
       st

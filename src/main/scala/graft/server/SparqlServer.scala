@@ -67,11 +67,12 @@ final class SparqlServer(@volatile private var store: GraftStore, port: Int = 0)
     // NanoSparqlServer explain page, QueryServlet.java explainQuery analog)
     if (params(raw).get("explain").exists(v => v == "true" || v == "details"))
       return respond(ex, 200, "text/plain", Engine.explain(st, q))
-    val df = Engine.query(st, q)
+    val parsed = graft.sparql.Parser.parseQuery(q)
+    val df = Engine.query(st, parsed)
     val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
     // CONSTRUCT/DESCRIBE yield RDF, not bindings — route on the QUERY FORM (a
     // SELECT projecting ?s ?p ?o must still get a bindings format)
-    val isGraph = graft.sparql.Parser.parseQuery(q) match {
+    val isGraph = parsed match {
       case _: graft.sparql.Ast.ConstructQuery | _: graft.sparql.Ast.DescribeQuery => true
       case _ => false
     }

@@ -220,6 +220,7 @@ object Algebra {
       case PSeq(a, b) => PSeq(p(a), p(b))
       case PAlt(a, b) => PAlt(p(a), p(b))
       case PZeroOrOne(x) => PZeroOrOne(p(x))
+      case PZero(x) => PZero(p(x))
       case PZeroOrMore(x) => PZeroOrMore(p(x))
       case POneOrMore(x) => POneOrMore(p(x))
       case neg: PNeg => neg

@@ -26,6 +26,8 @@ object Ast {
   final case class PSeq(a: Path, b: Path) extends Path
   final case class PAlt(a: Path, b: Path) extends Path
   final case class PZeroOrOne(p: Path) extends Path
+  /** `p{0}`: the zero-length path only (the node-domain self pairs of `p`). */
+  final case class PZero(p: Path) extends Path
   final case class PZeroOrMore(p: Path) extends Path
   final case class POneOrMore(p: Path) extends Path
   /** Negated property set !(iri|^iri|…): (iri, inverted). */

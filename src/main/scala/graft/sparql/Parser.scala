@@ -857,9 +857,9 @@ object Parser {
           if (lo == 0) PZeroOrMore(q)
           else if (lo == 1) POneOrMore(q)
           else PSeq(rep(lo - 1), POneOrMore(q))
+        case Some(0) if lo == 0 => PZero(q)
         case Some(m) =>
-          val upper = math.max(m, 1)
-          val alts = (math.max(lo, 1) to upper).map(rep).reduce(PAlt(_, _))
+          val alts = (math.max(lo, 1) to m).map(rep).reduce(PAlt(_, _))
           if (lo == 0) PZeroOrOne(alts) else alts
       }
     }

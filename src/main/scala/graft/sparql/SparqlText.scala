@@ -44,6 +44,7 @@ object SparqlText {
     case PSeq(a, b) => s"(${path(a)}/${path(b)})"
     case PAlt(a, b) => s"(${path(a)}|${path(b)})"
     case PZeroOrOne(q) => s"(${path(q)})?"
+    case PZero(q) => s"(${path(q)}){0}"
     case PZeroOrMore(q) => s"(${path(q)})*"
     case POneOrMore(q) => s"(${path(q)})+"
     case PNeg(set) => set.map { case (i, inv) => (if (inv) "^" else "") + s"<$i>" }

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** Per-entry execution profile of `SparkEntry.queries` against a warm store:
   * for each entry and iteration one JSON line with wall seconds and rows, the
-  * entry's jobs, stages and tasks, summed task run/CPU/GC time, records read,
+  * entry's jobs, stages and tasks, the classes it compiled and their janino
+  * compile time, summed task run/CPU/GC time, records read,
   * shuffle read/write and spill, and its top stages by run time with their
   * callsites (`JobMeter`). With `planDir`, also writes each entry's
   * `explain("formatted")` plan to `<planDir>/<name>.txt`.
@@ -13,6 +14,14 @@ import java.nio.file.{Files, Paths}
   * (`sfDir` defaults to `SPARK_GRAFT_SF_DIR`; cores follow `LocalSpark`).
   */
 object Profile {
+  /** Process-wide codegen counters: classes compiled and janino compile
+    * nanoseconds. Every thread's compiles count, so an entry's delta is exact
+    * only when nothing else runs alongside it (as here).
+    */
+  private def codegen: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse(sys.error(
       "usage: Profile <names|all> [sfDir] [iters] [planDir]"))
@@ -32,12 +41,15 @@ object Profile {
       case None => println(s"""PROFILE {"name":"$n","error":"unknown entry"}""")
       case Some(fn) =>
         for (i <- 1 to iters) try {
+          val (c0, ns0) = codegen
           val ((rows, sec), m) = JobMeter.measure(spark) {
             val t0 = System.nanoTime()
             val rows = fn(spark, sfDir).count()
             (rows, (System.nanoTime() - t0) / 1e9)
           }
+          val (c1, ns1) = codegen
           println(f"""PROFILE {"name":"$n","iter":$i,"wall_s":$sec%.2f,"rows":$rows,""" +
+            f""""codegen_compiles":${c1 - c0},"codegen_ms":${(ns1 - ns0) / 1e6}%.1f,""" +
             m.jsonFields + "}")
           if (i == 1) planDir.foreach(d => Files.writeString(Paths.get(s"$d/$n.txt"),
             fn(spark, sfDir).queryExecution.explainString(

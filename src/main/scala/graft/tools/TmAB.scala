@@ -84,7 +84,7 @@ object TmAB {
       "<http://www.w3.org/2002/07/owl#TransitiveProperty> .")
     val raw1 = graft.engine.Update(raw0,
       s"INSERT DATA { ${domAxioms.mkString("\n")} }")
-    val raw = new graft.model.GraftStore(spark, raw1.statements.unionByName(
+    val raw = raw1.withStatements(raw1.statements.unionByName(
       graft.sources.Rio.readTrig(spark, chainNt.mkString("\n"))))
     val atRestPath = "/tmp/graft_tmab_store"
     // GRAFT_TMAB_REUSE=1 reopens a previously-saved at-rest store (same
@@ -308,10 +308,7 @@ object TmAB {
     */
   def textProbe(spark: SparkSession, atRestPath: String, k: Long): Unit = {
     def time[A](f: => A): (A, Double, Long) = timed(spark)(f)
-    val lexDir = atRestPath + "-lexicon"
-    val st0 = new graft.model.GraftStore(spark,
-      graft.model.GraftStore.load(spark, atRestPath).statements,
-      lexiconPath = Some(lexDir), atRestPath = Some(atRestPath))
+    val st0 = graft.model.GraftStore.load(spark, atRestPath, withLexicon = true)
     // one-time derived-index persist, outside the probe's timed region
     val (_, tPersist, _) = time {
       st0.nodeTerms
@@ -367,7 +364,7 @@ object TmAB {
       "<urn:m:0> <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <urn:c:Mega> .")
     val raw0 = graft.model.Tpch.store(spark, sfDir)
     raw0.statements.count()
-    val raw = new graft.model.GraftStore(spark, raw0.statements.unionByName(
+    val raw = raw0.withStatements(raw0.statements.unionByName(
       graft.sources.Rio.readTrig(spark, megaNt.mkString("\n"))))
     val megaPath = "/tmp/graft_tmab_mega"
     val reuse = sys.env.contains("GRAFT_TMAB_REUSE") &&

@@ -67,6 +67,19 @@ class ParserSpec extends AnyFunSuite {
     assert(t3.asInstanceOf[TripleGP].p.isInstanceOf[PNeg])
   }
 
+  test("bounded path quantifiers: {0} is the zero-length path only") {
+    def path(q: String): Path = {
+      val GroupGP(Seq(t)) = sel(s"SELECT * WHERE { ?a <urn:p:x>$q ?b }").where: @unchecked
+      t.asInstanceOf[TripleGP].p
+    }
+    val x = PLink("urn:p:x")
+    assert(path("{0}") == PZero(x))
+    assert(path("{0,0}") == PZero(x))
+    assert(path("{0,1}") == PZeroOrOne(x))
+    assert(path("{0,2}") == PZeroOrOne(PAlt(x, PSeq(x, x))))
+    assert(path("{1}") == x)
+  }
+
   test("aggregates and modifiers") {
     val q = sel(
       """SELECT ?g (COUNT(DISTINCT ?x) AS ?c) (GROUP_CONCAT(?n; SEPARATOR="|") AS ?ns)

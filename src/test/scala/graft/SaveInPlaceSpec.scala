@@ -148,9 +148,7 @@ class SaveInPlaceSpec extends AnyFunSuite {
         :keep :tag "t-keep" .
       }
     """
-    def handle(): GraftStore = new GraftStore(spark,
-      GraftStore.load(spark, p).statements,
-      lexiconPath = Some(p + "-lexicon"), atRestPath = Some(p))
+    def handle(): GraftStore = GraftStore.load(spark, p, withLexicon = true)
     GraftStore.save(new GraftStore(spark, graft.sources.Rio.readTrig(spark, trig)).statements, p)
     handle().nodeTerms // persist the refcounted lexicon
     val prev = GraftStore.DEAD_TERM_VALVE
@@ -192,9 +190,7 @@ class SaveInPlaceSpec extends AnyFunSuite {
         :gone :text "vanishing doc" .
       }
     """
-    def handle(): GraftStore = new GraftStore(spark,
-      GraftStore.load(spark, p).statements,
-      lexiconPath = Some(p + "-lexicon"), atRestPath = Some(p))
+    def handle(): GraftStore = GraftStore.load(spark, p, withLexicon = true)
     GraftStore.save(new GraftStore(spark, graft.sources.Rio.readTrig(spark, trig)).statements, p)
     val st = handle()
     st.nodeTerms // persist the refcounted lexicon
