@@ -1123,13 +1123,10 @@ object SparkEntry {
     * creation runs under the lock). Kilobyte state across 32 stores is pure
     * store-init overhead; derive the count from the source bytes instead
     * (~32 MB of source per state partition), clamped to the session's
-    * configured parallelism so real-scale state still fans out. The source
-    * is a parquet directory: its size is the sum over its file tree.
+    * configured parallelism so real-scale state still fans out.
     */
   private def streamStatePartitions(s: SparkSession, dir: String, file: String): Int = {
-    val src = new org.apache.hadoop.fs.Path(s"$dir/$file")
-    val bytes = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(src).getLength
+    val bytes = new java.io.File(s"$dir/$file").length()
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(8, math.min(cap, ((bytes + (32L << 20) - 1) / (32L << 20)).toInt))
   }

@@ -44,10 +44,11 @@ object DfOps {
   // mutations). A plain set/restore bracket would re-enable propagation while
   // a sibling invocation is mid-checkpoint, re-poisoning its leaf. Restore only
   // when the LAST concurrent invocation on that session exits; `prev` is
-  // captured at its first entry. Keyed by session, not process-wide: stores
-  // of different sizes run on different sessions (GraftStore.execSession),
-  // and a process-wide count would skip the set on the second session and
-  // restore the first session's value onto it. An entry lives only while an
+  // captured at its first entry. Keyed by session, not process-wide: at-rest
+  // stores run on an interpreted sibling (GraftStore.execSession) and
+  // in-memory stores on the caller's session, and a process-wide count would
+  // skip the set on the second session and restore the first session's value
+  // onto it. An entry lives only while an
   // invocation on its session runs.
   private val ncState =
     scala.collection.mutable.HashMap.empty[org.apache.spark.sql.SparkSession, (Int, Option[String])]

@@ -560,34 +560,20 @@ object GraftStore {
   }
 
   /** Open the at-rest store at `path` — the single at-rest open, and the one
-    * place a store's execution mode is chosen (`execSession`): the statements
-    * are read through the session that store runs on, and everything derived
-    * from the store (Compiler frames and probe jobs, Update, truth
+    * place a store's execution mode is chosen: the statements are read
+    * through the caller's interpreted sibling (`execSession`), and everything
+    * derived from the store (Compiler frames and probe jobs, Update, truth
     * maintenance, the lexicon, the subject sidecar, SparqlServer) plans on
     * `store.spark`. `withLexicon` attaches the persisted lexicon next to the
     * statements (`path + "-lexicon"`).
     */
   def load(spark: SparkSession, path: String, withLexicon: Boolean = false): GraftStore = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-    val s = execSession(spark, bytes)
+    val s = execSession(spark)
     new GraftStore(s, s.read.parquet(path)
       .select(columns.map(col): _*), // normalize column order; p_id read as partition col
       lexiconPath = if (withLexicon) Some(path + "-lexicon") else None,
       atRestPath = Some(path))
   }
-
-  /** At-rest statement bytes below which a store runs interpreted: no
-    * whole-stage codegen and no per-expression codegen. The compiler inlines
-    * term-id hashes and FILTER constants as Java literals, so nearly every
-    * request generates new classes, and Spark's codegen cache (100 entries,
-    * keyed by classloader and code) misses even on repeated texts; on a small
-    * store janino's compile time is most of a request. Interpreting wins at
-    * sf0.01 (22 MB of statements); at sf0.1 (227 MB) repeated shapes favour
-    * codegen, so the floor sits between the two (README §Execution mode).
-    */
-  val INTERPRETED_BELOW_BYTES: Long = 128L << 20
 
   /** Interpreted sibling of each caller session, created once and held weakly
     * (a sibling holds no reference to its parent).
@@ -599,16 +585,20 @@ object GraftStore {
     s.conf.getOption("spark.sql.codegen.wholeStage").contains("false") &&
       s.conf.getOption("spark.sql.codegen.factoryMode").contains("NO_CODEGEN")
 
-  /** The session a store of `atRestBytes` at-rest statement bytes executes on:
-    * the caller's own at or above `INTERPRETED_BELOW_BYTES` (or when it already
-    * runs interpreted), else an interpreted sibling — `spark.newSession()` with
-    * the caller's runtime SQL conf copied in and both codegen paths off. The
+  /** The session an at-rest store executes on: an interpreted sibling of the
+    * caller's — `spark.newSession()` with the caller's runtime SQL conf copied
+    * in, no whole-stage codegen and no per-expression codegen — or the
+    * caller's own when it already runs interpreted. The compiler inlines
+    * term-id hashes and FILTER constants as Java literals, so nearly every
+    * request generates new classes and Spark's codegen cache (100 entries,
+    * keyed by classloader and code) misses even on repeated texts; janino's
+    * compile time is then most of a request (README §Execution mode). The
     * caller's conf is never written. Siblings share the SparkContext, the
     * cache manager and the scheduler pools; a conf the caller sets after the
     * sibling exists does not reach it.
     */
-  private[graft] def execSession(spark: SparkSession, atRestBytes: Long): SparkSession =
-    if (atRestBytes >= INTERPRETED_BELOW_BYTES || runsInterpreted(spark)) spark
+  private[graft] def execSession(spark: SparkSession): SparkSession =
+    if (runsInterpreted(spark)) spark
     else interpretedSiblings.synchronized {
       Option(interpretedSiblings.get(spark)).getOrElse {
         val s = spark.newSession()

@@ -838,12 +838,14 @@ object Parser {
       else if (acceptPunct("+")) POneOrMore(prim)
       else if (acceptPunct("?")) PZeroOrOne(prim)
       else if (isPunct("{")) { // {n}, {n,}, {n,m} bounded repetition (Blazegraph extension)
+        val at = cur.pos
         i += 1
         val lo = parseLong().toInt
         val hi: Option[Int] =
           if (acceptPunct(",")) { if (isPunct("}")) None else Some(parseLong().toInt) }
           else Some(lo)
         expectPunct("}")
+        hi.filter(_ < lo).foreach(m => throw ParseError(s"path quantifier {$lo,$m}: upper bound below lower bound", at))
         expandRange(prim, lo, hi)
       }
       else prim

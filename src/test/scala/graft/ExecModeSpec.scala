@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Execution mode chosen once, at open (`GraftStore.load`): a store whose
-  * at-rest statements are below `GraftStore.INTERPRETED_BELOW_BYTES` runs on
-  * an interpreted sibling of the caller's session (no whole-stage codegen, no
-  * per-expression codegen); a larger one keeps the caller's session.
+/** Execution mode chosen once, at open (`GraftStore.load`): an at-rest store
+  * runs on an interpreted sibling of the caller's session (no whole-stage
+  * codegen, no per-expression codegen); in-memory stores keep the caller's.
   */
 class ExecModeSpec extends GraftSuite {
 
@@ -129,18 +128,16 @@ class ExecModeSpec extends GraftSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 
-  test("the floor keeps the caller's session above it and one interpreted sibling below") {
-    val floor = GraftStore.INTERPRETED_BELOW_BYTES
-    assert(GraftStore.execSession(spark, floor) eq spark)
-    assert(GraftStore.execSession(spark, 227L << 20) eq spark) // sf0.1's statements at rest
-    val sib = GraftStore.execSession(spark, floor - 1)
+  test("each caller session has one interpreted sibling, with the caller's conf") {
+    val sib = GraftStore.execSession(spark)
     assert(sib ne spark)
-    assert(GraftStore.execSession(spark, 0L) eq sib)
+    assert(GraftStore.execSession(spark) eq sib)
+    assert(store.spark eq sib)
     assert(sib.conf.get("spark.sql.codegen.wholeStage") == "false")
     assert(sib.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN")
     // a session that already runs interpreted is its own sibling: reopening a
     // committed store never chains new sessions
-    assert(GraftStore.execSession(sib, 0L) eq sib)
+    assert(GraftStore.execSession(sib) eq sib)
     // the caller's runtime conf is copied in
     assert(sib.conf.get("spark.sql.shuffle.partitions") == spark.conf.get("spark.sql.shuffle.partitions"))
     assert(sib.conf.get("spark.sql.session.timeZone") == "UTC")

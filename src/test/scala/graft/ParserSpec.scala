@@ -78,6 +78,11 @@ class ParserSpec extends AnyFunSuite {
     assert(path("{0,1}") == PZeroOrOne(x))
     assert(path("{0,2}") == PZeroOrOne(PAlt(x, PSeq(x, x))))
     assert(path("{1}") == x)
+    // a reversed range is a syntax error, not an empty alternation
+    for (q <- Seq("{1,0}", "{2,0}", "{3,1}")) {
+      val e = intercept[Parser.ParseError](path(q))
+      assert(e.msg.contains("upper bound below lower bound"), q)
+    }
   }
 
   test("aggregates and modifiers") {
