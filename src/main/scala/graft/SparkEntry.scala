@@ -907,7 +907,11 @@ object SparkEntry {
       // Structured Streaming end-to-end: file-source micro-batches through the
       // windowed aggregation into a memory sink (complete mode), then the sink table
       val sch = s.read.parquet(s"$dir/events.parquet").schema
-      val ev = s.readStream.schema(sch)
+      // State-sized partitioning (see streamSession): hour×type window state
+      // is tiny, and 32 state-store provider inits serialize on the
+      // process-wide loadedProviders lock
+      val ss = streamSession(s, dir, "events.parquet")
+      val ev = ss.readStream.schema(sch)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .withColumn("ts2", tsStamp(sch("ts").dataType))
       val agg = ev.groupBy(window(col("ts2"), "1 hour").as("w"), col("event_type"))
@@ -917,19 +921,14 @@ object SparkEntry {
       val qn = "qsw_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // AvailableNow: drain everything in bounded micro-batches then self-stop —
       // the battery measures the operator, not open-ended trigger polling.
-      // State-sized partitioning (see streamStatePartitions): hour×type window
-      // state is tiny here, and 32 state-store provider inits serialize on the
-      // process-wide loadedProviders lock
-      val q = withStatePartitions(s, streamStatePartitions(s, dir, "events.parquet")) {
-        agg.writeStream.format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("complete").start()
-      }
+      val q = agg.writeStream.format("memory").queryName(qn)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .outputMode("complete").start()
       try q.awaitTermination() finally q.stop()
       // detach the result from the memory sink so the sink table (one per
       // invocation) is dropped instead of accumulating across battery runs
-      val out = s.table(qn).localCheckpoint()
-      s.catalog.dropTempView(qn)
+      val out = ss.table(qn).localCheckpoint()
+      ss.catalog.dropTempView(qn)
       out
     }): Q,
       Some("""SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -943,22 +942,21 @@ object SparkEntry {
       // watermark bounding the state store); append-mode memory sink accumulates
       // one row per first-seen hash
       val sch = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(sch)
+      // state-sized partitioning (see streamSession): first-seen hash state
+      // per partition is kilobytes at this SF
+      val ss = streamSession(s, dir, "documents.parquet")
+      val stream = ss.readStream.schema(sch)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       val dedup = stream.select(md5(col("text")).as("h")).dropDuplicates("h")
       val qn = "qsd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // state-sized partitioning (see streamStatePartitions): first-seen hash
-      // state per partition is kilobytes at this SF
-      val q = withStatePartitions(s, streamStatePartitions(s, dir, "documents.parquet")) {
-        dedup.writeStream.format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append").start()
-      }
+      val q = dedup.writeStream.format("memory").queryName(qn)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .outputMode("append").start()
       try q.awaitTermination() finally q.stop()
       // evaluate eagerly and drop the sink table: the memory sink holds every
       // unique hash row in driver memory, one table per invocation otherwise
-      val uniq = s.table(qn).count()
-      s.catalog.dropTempView(qn)
+      val uniq = ss.table(qn).count()
+      ss.catalog.dropTempView(qn)
       import s.implicits._
       Seq(uniq).toDF("uniq")
     }): Q,
@@ -1131,14 +1129,14 @@ object SparkEntry {
     math.max(8, math.min(cap, ((bytes + (32L << 20) - 1) / (32L << 20)).toInt))
   }
 
-  /** Bracket a streaming-query START with the state-sized shuffle-partition
-    * count (the stream pins its state partitioning at start; the conf is
-    * restored immediately after so batch planning is untouched). */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(start: => T): T = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = s.conf.get(spKey)
-    s.conf.set(spKey, n.toString)
-    try start finally s.conf.set(spKey, spPrev)
+  /** The session a stateful stream entry runs on (its readStream, memory
+    * sink and sink table): a sibling of `s` with the state-sized
+    * shuffle-partition count, which the stream pins at start. The caller's
+    * conf is never written, so concurrent planning on `s` is untouched. */
+  private def streamSession(s: SparkSession, dir: String, file: String): SparkSession = {
+    val ss = graft.model.GraftStore.siblingSession(s)
+    ss.conf.set("spark.sql.shuffle.partitions", streamStatePartitions(s, dir, file).toString)
+    ss
   }
 
   private val pipelineQueries: Seq[(String, Q, Option[String])] = Seq(
@@ -2475,7 +2473,13 @@ object SparkEntry {
     // event-time join (both sides streaming), emitted through the append sink
     ("q_stream_join", ((s: SparkSession, dir: String) => {
       val sch = s.read.parquet(s"$dir/events.parquet").schema
-      def src = s.readStream.schema(sch)
+      // Stateful partition count sizes to the STATE, not the batch CPUs: a
+      // stream-stream join instantiates 4 state stores per shuffle partition,
+      // so 32 partitions of kilobyte state is pure store-init overhead
+      // (streamStatePartitions derives the count from source bytes — 8 at
+      // this SF, rising with state volume at real scale)
+      val ss = streamSession(s, dir, "events.parquet")
+      def src = ss.readStream.schema(sch)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .withColumn("ts2", tsStamp(sch("ts").dataType))
       val views = src.filter(col("event_type") === "view")
@@ -2493,19 +2497,12 @@ object SparkEntry {
       val qn = "qsj_" + java.util.UUID.randomUUID().toString.replace("-", "")
       // AvailableNow drains the (single-file) source in bounded micro-batches
       // and self-stops — wall time reflects the join, not trigger spin-up.
-      // Stateful partition count sizes to the STATE, not the batch CPUs: a
-      // stream-stream join instantiates 4 state stores per shuffle partition,
-      // so 32 partitions of kilobyte state is pure store-init overhead
-      // (streamStatePartitions derives the count from source bytes — 8 at
-      // this SF, rising with state volume at real scale)
-      val q = withStatePartitions(s, streamStatePartitions(s, dir, "events.parquet")) {
-        joined.writeStream.format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("append").start()
-      }
+      val q = joined.writeStream.format("memory").queryName(qn)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .outputMode("append").start()
       try q.awaitTermination() finally q.stop()
-      val out = s.table(qn).localCheckpoint()
-      s.catalog.dropTempView(qn)
+      val out = ss.table(qn).localCheckpoint()
+      ss.catalog.dropTempView(qn)
       out
     }): Q,
       Some("""SELECT p.event_id AS purchase_id, v.event_id AS view_id
@@ -2518,7 +2515,13 @@ object SparkEntry {
     // oracle derives identical sessions with the lag/cumulative-sum law
     ("p_stream_sessions", ((s: SparkSession, dir: String) => {
       val sch = s.read.parquet(s"$dir/events.parquet").schema
-      val ev = s.readStream.schema(sch)
+      // state-sized partitioning (see streamSession): session state here is
+      // tiny, so fewer state-store instances beat batch parallelism
+      val ss = streamSession(s, dir, "events.parquet")
+      // partial-merge sessions map-side before the keyed exchange (the session
+      // analog of partial aggregation — the shape that scales)
+      ss.conf.set("spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition", "true")
+      val ev = ss.readStream.schema(sch)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .withColumn("ts2", tsStamp(sch("ts").dataType))
       val agg = ev.groupBy(session_window(col("ts2"), "30 minutes").as("w"),
@@ -2528,24 +2531,12 @@ object SparkEntry {
         .select(col("w")("start").as("session_start"), col("user_id"),
           col("n_events"), col("cents"))
       val qn = "pss_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // partial-merge sessions map-side before the keyed exchange (the session
-      // analog of partial aggregation — the shape that scales)
-      val mergeKey = "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition"
-      val prev = s.conf.getOption(mergeKey)
-      s.conf.set(mergeKey, "true")
-      // state-sized partitioning (see streamStatePartitions): session state
-      // here is tiny, so fewer state-store instances beat batch parallelism
-      val q = withStatePartitions(s, streamStatePartitions(s, dir, "events.parquet")) {
-        agg.writeStream.format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode("complete").start()
-      }
-      try q.awaitTermination() finally {
-        q.stop()
-        prev match { case Some(v) => s.conf.set(mergeKey, v); case None => s.conf.unset(mergeKey) }
-      }
-      val out = s.table(qn).localCheckpoint()
-      s.catalog.dropTempView(qn)
+      val q = agg.writeStream.format("memory").queryName(qn)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .outputMode("complete").start()
+      try q.awaitTermination() finally q.stop()
+      val out = ss.table(qn).localCheckpoint()
+      ss.catalog.dropTempView(qn)
       out
     }): Q,
       Some("""WITH p AS (SELECT user_id, ts, value,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -85,13 +85,19 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object VectorExprs {
-  /** Idempotent session registration; call before using `cos_sim` in a plan. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cos_sim",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "graft_cos_sim(a, b)")
-        CosineSim(args.head, args(1))
-      },
-      "built-in")
+  /** Idempotent session registration; call before using `cos_sim` in a plan.
+    * Registers once per session: re-registering replaces the function and
+    * logs a warning on every pipeline call.
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("graft_cos_sim")))
+      registry.createOrReplaceTempFunction(
+        "graft_cos_sim",
+        { args: Seq[Expression] =>
+          require(args.length == 2, "graft_cos_sim(a, b)")
+          CosineSim(args.head, args(1))
+        },
+        "built-in")
+  }
 }

@@ -70,24 +70,208 @@ object Rdfs {
 
   /** Driver-side transitive closure of a vocabulary-sized relation. */
   private def transitiveRows(rows: Array[(Row, Row)]): Seq[(Row, Row)] = {
-    def key(r: Row) = r.getAs[Long]("id")
-    val adj = rows.groupBy(p => key(p._1))
+    val adj = rows.groupBy(p => idOf(p._1))
     val out = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
     val rep = scala.collection.mutable.HashMap.empty[Long, Row]
-    rows.foreach { case (a, b) => rep(key(a)) = a; rep(key(b)) = b }
+    rows.foreach { case (a, b) => rep(idOf(a)) = a; rep(idOf(b)) = b }
     def dfs(start: Long): Unit = {
       val seen = scala.collection.mutable.HashSet.empty[Long]
       var frontier = List(start)
       while (frontier.nonEmpty) {
         val next = frontier.flatMap(n => adj.getOrElse(n, Array.empty[(Row, Row)])
-          .map(p => key(p._2))).filterNot(seen)
+          .map(p => idOf(p._2))).filterNot(seen)
         next.foreach { m => seen += m; out += ((start, m)) }
         frontier = next
       }
     }
-    rows.map(p => key(p._1)).distinct.foreach(dfs)
+    rows.map(p => idOf(p._1)).distinct.foreach(dfs)
     out.toSeq.map { case (a, b) => (rep(a), rep(b)) }
   }
+
+  private def idOf(r: Row): Long = r.getAs[Long]("id")
+
+  /** (s, p, o) id keys `__sk`/`__pk`/`__ok`: 24-byte join keys, not term structs. */
+  private def keyed(df: DataFrame): DataFrame = df
+    .withColumn("__sk", col("s")("id")).withColumn("__pk", col("p")("id"))
+    .withColumn("__ok", col("o")("id"))
+  private def dedup(df: DataFrame): DataFrame =
+    keyed(df).dropDuplicates("__sk", "__pk", "__ok").drop("__sk", "__pk", "__ok")
+
+  /** Empty (s, p, o) frame. A fresh LocalRelation, not `facts.limit(0)`: an
+    * empty frame sharing the fact scan's attribute ids poisons the
+    * sibling-union constraint rewrite.
+    */
+  private def emptySpo(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      org.apache.spark.sql.types.StructType(Seq("s", "p", "o").map(n =>
+        org.apache.spark.sql.types.StructField(n, Term.schema))))
+
+  private type Pairs = Seq[(Row, Row)]
+
+  /** Pairs of `a` not in `b`, compared by (id, id). */
+  private def minusPairs(a: Pairs, b: Pairs): Pairs = {
+    val bIds = b.map(p => (idOf(p._1), idOf(p._2))).toSet
+    a.filterNot(p => bIds((idOf(p._1), idOf(p._2))))
+  }
+  private def uniqPairs(ps: Pairs): Pairs =
+    ps.map(p => (idOf(p._1), idOf(p._2)) -> p).toMap.values.toSeq
+
+  /** The rdfs5/11 schema statements and the owl equivalence swaps as (s, p, o). */
+  private def schemaStmts(spark: org.apache.spark.sql.SparkSession, sc: Pairs, sp: Pairs,
+                          eqcSwap: Pairs, eqpSwap: Pairs): DataFrame =
+    Seq((sc, Term.RDFS_SUBCLASSOF), (sp, Term.RDFS_SUBPROPERTYOF),
+        (eqcSwap, OWL_EQCLASS), (eqpSwap, OWL_EQPROP))
+      .collect { case (ps, pred) if ps.nonEmpty =>
+        pairsDf(spark, ps, "s", "o").select(col("s"), Term.iri(pred).as("p"), col("o")) }
+      .reduceOption(_.unionByName(_)).getOrElse(emptySpo(spark))
+
+  // ---- the staged rule program ----
+  // closure(), deltaDerive and rederive run the same rules in the same stage
+  // order; each driver only chooses the premise frame a stage reads. DRed
+  // (Gupta, Mumick and Subrahmanian, SIGMOD 1993) is correct only when its
+  // delete and re-derive passes apply exactly the materializer's rules.
+
+  /** The schema relation a rule reads. */
+  private sealed trait Rel
+  private object Rel {
+    case object SubProp extends Rel
+    case object Inverse extends Rel
+    case object Symmetric extends Rel
+    case object HasValue extends Rel
+    case object Domain extends Rel
+    case object Range extends Rel
+    case object SubClass extends Rel
+  }
+
+  /** An ordinary rule as data. Premises are either the rows of the
+    * relation's key predicates (`byType = false`, selected by `p_id`) or the
+    * rdf:type rows of its key classes (`byType = true`, selected by `o.id`).
+    * The conclusion takes its subject from premise column `s`, its predicate
+    * from column `p` (None: rdf:type) and its object from column `o`; the
+    * relation contributes `q` (and `v` for hasValue). `resourceObj` drops
+    * premises with a literal object.
+    */
+  private final case class Rule(rel: Rel, byType: Boolean,
+                                s: String, p: Option[String], o: String,
+                                resourceObj: Boolean)
+
+  // (x p y), p ⊑* q → (x q y)
+  private val rdfs7 = Rule(Rel.SubProp, byType = false, "s", Some("q"), "o", resourceObj = false)
+  // RuleOwlInverseOf1/2: (x p y), p inverseOf q (either direction) → (y q x)
+  private val inverseOf = Rule(Rel.Inverse, byType = false, "o", Some("q"), "s", resourceObj = true)
+  // RuleOwlSymmetricProperty: (x p y), p symmetric → (y p x)
+  private val symmetric = Rule(Rel.Symmetric, byType = false, "o", Some("q"), "s", resourceObj = true)
+  // RuleOwlHasValue: (x type a), a onProperty p, a hasValue v → (x p v)
+  private val hasValue = Rule(Rel.HasValue, byType = true, "s", Some("q"), "v", resourceObj = false)
+  // rdfs2: (x p y), p domain c → (x type c)
+  private val rdfs2 = Rule(Rel.Domain, byType = false, "s", None, "q", resourceObj = false)
+  // rdfs3: (x p y), p range c → (y type c)
+  private val rdfs3 = Rule(Rel.Range, byType = false, "o", None, "q", resourceObj = true)
+  // rdfs9: (x type a), a ⊑* b → (x type b)
+  private val rdfs9 = Rule(Rel.SubClass, byType = true, "s", None, "q", resourceObj = false)
+
+  /** Rules that read one premise frame. A `lateOnly` stage reads only the
+    * conclusions of the late stages before it, not every fact.
+    */
+  private final case class Stage(rules: Seq[Rule], lateOnly: Boolean = false)
+
+  /** The stage order, defined once: the early stages, then the transitive
+    * fixpoint and the sameAs substitution (bespoke in each driver), then the
+    * late stages. Each stage's conclusions join the premises of every later
+    * stage. Domain and range share a stage: neither reads the other's types.
+    * hasValue fires twice; the second firing reads only the types the late
+    * stages derived (SCALE.md §OWL has the cascades this leaves staged).
+    */
+  private val earlyStages: Seq[Stage] = Seq(
+    Stage(Seq(rdfs7)), Stage(Seq(inverseOf)), Stage(Seq(symmetric)), Stage(Seq(hasValue)))
+  private val lateStages: Seq[Stage] = Seq(
+    Stage(Seq(rdfs2, rdfs3)), Stage(Seq(rdfs9)), Stage(Seq(hasValue), lateOnly = true))
+
+  /** The vocabulary-sized schema relations the rules read: (premise key,
+    * conclusion term) pairs unique by id, sp and sc transitively closed, inv
+    * in both directions, sym as (p, p); `hv` holds the hasValue restrictions
+    * (restriction class id, onProperty, hasValue).
+    */
+  private final case class RuleSchema(sp: Pairs, inv: Pairs, sym: Pairs,
+      dom: Pairs, rng: Pairs, sc: Pairs, hv: Seq[(Long, Row, Row)]) {
+    private def pairs(rel: Rel): Pairs = rel match {
+      case Rel.SubProp => sp
+      case Rel.Inverse => inv
+      case Rel.Symmetric => sym
+      case Rel.Domain => dom
+      case Rel.Range => rng
+      case Rel.SubClass => sc
+      case Rel.HasValue => Nil
+    }
+    def has(rel: Rel): Boolean =
+      if (rel == Rel.HasValue) hv.nonEmpty else pairs(rel).nonEmpty
+    def nonEmpty: Boolean =
+      Seq(sp, inv, sym, dom, rng, sc).exists(_.nonEmpty) || hv.nonEmpty
+    def keys(rel: Rel): Seq[Long] =
+      (if (rel == Rel.HasValue) hv.map(_._1) else pairs(rel).map(p => idOf(p._1))).distinct
+    /** The predicates a rule's premises live in. */
+    def premisePids(rule: Rule): Seq[Long] =
+      if (!has(rule.rel)) Nil else if (rule.byType) Seq(typeId) else keys(rule.rel)
+    /** Broadcast frame: key `k` → conclusion term `q` (hasValue: `q`, `v`). */
+    def frame(spark: org.apache.spark.sql.SparkSession, rel: Rel): DataFrame =
+      if (rel == Rel.HasValue) {
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(hv.map { case (a, p, v) => Row(a, p, v) }, 1),
+          StructType(Seq(StructField("k", LongType),
+            StructField("q", Term.schema), StructField("v", Term.schema))))
+      } else pairsDf(spark, pairs(rel), "a", "q").select(col("a")("id").as("k"), col("q"))
+    /** Only the pairs whose conclusion can land in `preds` (predicate-valued
+      * conclusions) or `classes` (type conclusions); None keeps all.
+      */
+    def restrict(preds: Option[Set[Long]], classes: Option[Set[Long]]): RuleSchema = {
+      def by(ps: Pairs, ids: Option[Set[Long]]) = ids.fold(ps)(s => ps.filter(p => s(idOf(p._2))))
+      RuleSchema(by(sp, preds), by(inv, preds), by(sym, preds),
+        by(dom, classes), by(rng, classes), by(sc, classes),
+        preds.fold(hv)(s => hv.filter(r => s(idOf(r._2)))))
+    }
+    def minus(o: RuleSchema): RuleSchema = {
+      val hvIds = o.hv.map(r => (r._1, idOf(r._2), idOf(r._3))).toSet
+      RuleSchema(minusPairs(sp, o.sp), minusPairs(inv, o.inv), minusPairs(sym, o.sym),
+        minusPairs(dom, o.dom), minusPairs(rng, o.rng), minusPairs(sc, o.sc),
+        hv.filterNot(r => hvIds((r._1, idOf(r._2), idOf(r._3)))))
+    }
+  }
+  private object RuleSchema {
+    def of(v: Vocab, symProps: Array[Row]): RuleSchema = {
+      def closed(base: Array[(Row, Row)]): Pairs = uniqPairs(base ++ transitiveRows(base))
+      RuleSchema(sp = closed(v.sp), inv = uniqPairs(v.inv ++ v.inv.map(_.swap)),
+        sym = uniqPairs(symProps.map(r => (r, r))),
+        dom = uniqPairs(v.dom), rng = uniqPairs(v.rng), sc = closed(v.sc),
+        hv = v.restrictions)
+    }
+  }
+
+  /** Fire one rule: the premises pruned to the relation's keys (the filter
+    * reaches the parquet scan: partition pruning for `p_id`, row-group
+    * skipping for rdf:type rows by `o.id`), joined to the broadcast relation,
+    * projected to (s, p, o).
+    */
+  private def fire(spark: org.apache.spark.sql.SparkSession, rule: Rule,
+                   premises: DataFrame, schema: RuleSchema): DataFrame = {
+    val keys = schema.keys(rule.rel)
+    val (sel, key) =
+      if (rule.byType)
+        (premises.filter(col("p_id") === typeId && col("o")("id").isin(keys: _*)),
+          col("o")("id"))
+      else (premises.filter(col("p_id").isin(keys: _*)), col("p_id"))
+    val joined = sel.join(broadcast(schema.frame(spark, rule.rel)), key === col("k"))
+    (if (rule.resourceObj) joined.filter(col("o")("kind") =!= Term.KIND_LITERAL) else joined)
+      .select(col(rule.s).as("s"), rule.p.fold(Term.iri(Term.RDF_TYPE))(col).as("p"),
+        col(rule.o).as("o"))
+  }
+
+  /** Fire a stage's rules that have schema pairs, each over `premises(rule)`. */
+  private def fireStage(spark: org.apache.spark.sql.SparkSession, stage: Stage,
+                        schema: RuleSchema)(premises: Rule => DataFrame): Option[DataFrame] =
+    stage.rules.filter(r => schema.has(r.rel))
+      .map(r => fire(spark, r, premises(r), schema))
+      .reduceOption(_.unionByName(_))
 
   /** Truth maintenance (rdf/inf/TruthMaintenance.java): after retraction of explicit
     * statements, drop ALL materialized entailments and re-run the closure from the
@@ -197,13 +381,12 @@ object Rdfs {
   def lastTmPath: String = lastTmPathTl.get()
   def lastTmPath_=(v: String): Unit = lastTmPathTl.set(v)
 
-  /** Thread-local overlay for the `graft.tm.*` tuning valves (deltaCap,
-    * cone.driverMax, sa.driverMax, sa.pairCap). The TM suites force specific
-    * code paths by shrinking a valve for one scenario; with suites running
-    * concurrently in one JVM, a `sys.props` mutation would reroute every
-    * OTHER in-flight scenario too. The valves are read on the mutating
-    * thread (driver-side plan construction), so a thread-confined overlay is
-    * exact; `sys.props` stays honored as the process-wide default.
+  /** Test hooks for the `graft.tm.*` valves (deltaCap, cone.driverMax,
+    * sa.driverMax, sa.pairCap): the TM suites force specific code paths by
+    * shrinking a valve for one scenario. Thread-confined, because suites run
+    * concurrently in one JVM and the valves are read on the mutating thread
+    * (driver-side plan construction). There is no process-wide setting; the
+    * defaults are constants.
     */
   private val tmPropsTl: ThreadLocal[Map[String, String]] =
     ThreadLocal.withInitial(() => Map.empty[String, String])
@@ -212,8 +395,7 @@ object Rdfs {
     tmPropsTl.set(prev ++ kv)
     try f finally tmPropsTl.set(prev)
   }
-  private def tmProp(name: String): Option[String] =
-    tmPropsTl.get().get(name).orElse(sys.props.get(name))
+  private def tmProp(name: String): Option[String] = tmPropsTl.get().get(name)
 
   /** sameAs delta state for truthMaintainDelta: alias maps (xid → alias term;
     * OLD for the over-delete pass, NEW for re-derivation and the insert side)
@@ -247,7 +429,7 @@ object Rdfs {
     // delta-size valve: the retraction/novelty key sets below ride broadcast
     // hash joins sized by the delta — a bulk mutation past broadcastable size
     // is better served by the recompute (count on the checkpointed frame is
-    // metadata-cheap). -Dgraft.tm.deltaCap overrides for tests.
+    // metadata-cheap). Tests lower it through withTmProps.
     val deltaCap = tmProp("graft.tm.deltaCap")
       .map(_.toLong).getOrElse(10000000L)
 
@@ -275,9 +457,9 @@ object Rdfs {
       return None
     // characteristic re-declarations: TRANSITIVE marks are delta-maintainable
     // (the cone treats an en/de-declared property as a whole-property
-    // effective-edge delta — see transOldIds below), SYMMETRIC marks land
-    // in the dIb schema diff as a (p,p) self-pair (r15 — the dIb arm's
-    // premise expansion mirrors the closure's accumulated-edge flip stage),
+    // effective-edge delta — see transOldRows below), SYMMETRIC marks land
+    // in the symmetric relation's schema diff as a (p,p) pair (r15 —
+    // deltaDerive's schema arm fires it over the closure's premise frame),
     // and FP/IFP marks feed the sameAs class diff with the pairs they mint
     // (r16 — see the fpBase section below); RESTRICTION markers re-wire rule
     // machinery the delta arms don't model → recompute
@@ -293,9 +475,6 @@ object Rdfs {
     // so every probe below reads delta- or partition-sized data directly.
     val exp = next.statements.filter(col("stype") =!= GraftStore.STYPE_INFERRED)
     val inf = next.statements.filter(col("stype") === GraftStore.STYPE_INFERRED)
-    def key3(df: DataFrame): DataFrame = df
-      .withColumn("__sk", col("s")("id")).withColumn("__pk", col("p")("id"))
-      .withColumn("__ok", col("o")("id"))
     // old-state views reconstructed from (next ∪ removed) − added: the lazy
     // pre-update plan is never re-evaluated (collectVocab needs p_id, s, o).
     // The buffers are ACTUAL deltas (insert's post-novelty rows, delete's
@@ -303,7 +482,7 @@ object Rdfs {
     // is keyed on (s,p,o,g) — insert novelty is per quad, so an (s,p,o)-keyed
     // anti-join would wrongly drop a pre-existing copy of the triple living
     // in another graph from the old view
-    def key4(df: DataFrame): DataFrame = key3(df)
+    def key4(df: DataFrame): DataFrame = keyed(df)
       .withColumn("__gk", coalesce(col("g")("id"), lit(0L)))
     def vocabView(df: DataFrame): DataFrame =
       df.select(col("p_id"), col("s"), col("o"))
@@ -328,28 +507,17 @@ object Rdfs {
     // below. `saPresent` (final form) is derived in the fpBase section once
     // the FP/IFP minted-pair state is known.
 
-    def idOf(r: Row): Long = r.getAs[Long]("id")
-    def ids(ps: Seq[(Row, Row)]): Set[(Long, Long)] =
-      ps.map(p => (idOf(p._1), idOf(p._2))).toSet
-    def minus(a: Seq[(Row, Row)], b: Seq[(Row, Row)]): Seq[(Row, Row)] = {
-      val bIds = ids(b); a.filterNot(p => bIds((idOf(p._1), idOf(p._2))))
-    }
-    def closed(base: Array[(Row, Row)]): Seq[(Row, Row)] =
-      (base ++ transitiveRows(base))
-        .map(p => (idOf(p._1), idOf(p._2)) -> p).toMap.values.toSeq
-    val scOld = closed(vOld.sc); val scNew = closed(vNew.sc)
-    val spOld = closed(vOld.sp); val spNew = closed(vNew.sp)
     // Characteristic re-declarations (the r14/r15 mark-delta pattern,
     // generalized): collectVocab2 shares one characteristic-marker scan
     // between the views (vOld.<char>Props == vNew.<char>Props == the NEW
     // table's truth), so each OLD characteristic set derives from the mark
     // delta plus one pruned old-view probe (re-asserts and multi-graph copies
     // keep the schema unchanged).
-    // SYMMETRIC: the en/de-declared property lands in dIbDel/dIbAdd as a
-    // (p,p) self-pair — the dIb arm's premise expansion (sp*-into flips +
-    // inverse-partner straight copies) mirrors the closure's accumulated-edge
-    // flip. FP/IFP (r16): the old/new sets gate the minted-pair class-diff
-    // work in the fpBase section below.
+    // SYMMETRIC: the en/de-declared property lands in the symmetric
+    // relation's schema diff as a (p,p) pair, fired by deltaDerive's schema
+    // arm over closure()'s premise frame for that stage. FP/IFP (r16): the
+    // old/new sets gate the minted-pair class-diff work in the fpBase section
+    // below.
     def oldCharRows(charId: Long, newRows: Array[Row]): Array[Row] = {
       val mk = markRows.filter(_.getLong(2) == charId)
       if (mk.isEmpty) newRows
@@ -373,11 +541,10 @@ object Rdfs {
       oldCharRows(functionalId, vNew.funcProps)
     val invFuncOldRows: Array[Row] =
       oldCharRows(invFunctionalId, vNew.invFuncProps)
-    def invBoth(inv: Array[(Row, Row)], syms: Array[Row]): Seq[(Row, Row)] =
-      ((inv ++ inv.map(_.swap)).toSeq ++ syms.map(r => (r, r)))
-        .map(p => (idOf(p._1), idOf(p._2)) -> p).toMap.values.toSeq
-    val ibOld = invBoth(vOld.inv, symOldRows)
-    val ibNew = invBoth(vNew.inv, vNew.symProps)
+    // the rule program's schema relations under each view, and their diffs
+    val sOld = RuleSchema.of(vOld, symOldRows)
+    val sNew = RuleSchema.of(vNew, vNew.symProps)
+    val dDel = sOld.minus(sNew); val dAdd = sNew.minus(sOld)
 
     // FEEDER CLOSURE: the set of predicates whose facts can (through any
     // chain of rdfs7 subproperty steps and inverse/symmetric flips) become
@@ -385,8 +552,8 @@ object Rdfs {
     // already transitively closed, but sp and ib compose (r ⊑ q, inv(q)=p),
     // so the closure iterates to quiescence.
     def feederClosure(targets: Set[Long]): Set[Long] = {
-      val sps = (spOld ++ spNew).map(p => (idOf(p._1), idOf(p._2)))
-      val ibs = (ibOld ++ ibNew).map(p => (idOf(p._1), idOf(p._2)))
+      val sps = (sOld.sp ++ sNew.sp).map(p => (idOf(p._1), idOf(p._2)))
+      val ibs = (sOld.inv ++ sNew.inv).map(p => (idOf(p._1), idOf(p._2)))
       var f = targets
       var grown = true
       while (grown) {
@@ -424,20 +591,8 @@ object Rdfs {
     // collapses, rederive keeps the rdfs7/inverse copies that remain
     // derivable).
     val transNewIdSet = vNew.transProps.map(idOf).toSet
-    val (transOldIdSet, oldOnlyTransRows): (Set[Long], Array[Row]) =
-      if (markRows.isEmpty) (transNewIdSet, Array.empty[Row])
-      else {
-        val touched = markRows.map(_.getStruct(3)).map(idOf).distinct
-        val oldHas = oldExp
-          .filter(col("p_id") === typeId && col("o")("id") === transitiveId &&
-            col("s")("id").isin(touched: _*))
-          .select(col("s")("id")).distinct().collect().map(_.getLong(0)).toSet
-        val oldIds = (transNewIdSet -- touched) ++ touched.filter(oldHas)
-        val rows = markRows.map(_.getStruct(3))
-          .filter(r => oldIds(idOf(r)) && !transNewIdSet(idOf(r)))
-          .map(r => idOf(r) -> r).toMap.values.toArray
-        (oldIds, rows)
-      }
+    val transOldRows = oldCharRows(transitiveId, vNew.transProps)
+    val transOldIdSet = transOldRows.map(idOf).toSet
     val transIds = transNewIdSet ++ transOldIdSet
     if (transIds.nonEmpty) {
       val cone = feederClosure(transIds) // includes transIds
@@ -485,9 +640,9 @@ object Rdfs {
       else base
     }
     def feederStates(t0: Long): Set[(Long, Boolean)] =
-      feederStatesOf(t0, spNew, vNew.inv, vNew.symProps)
+      feederStatesOf(t0, sNew.sp, vNew.inv, vNew.symProps)
     def feederStatesOld(t0: Long): Set[(Long, Boolean)] =
-      feederStatesOf(t0, spOld, vOld.inv, symOldRows)
+      feederStatesOf(t0, sOld.sp, vOld.inv, symOldRows)
 
     // ---- FP/IFP (r16): minted-pair deltas ride the sameAs class diff ----
     // The rules derive owl:sameAs from two facts of a functional property
@@ -521,10 +676,9 @@ object Rdfs {
           markRows.exists(r => (r.getLong(2) == transitiveId ||
             r.getLong(2) == symmetricId) && fpCone(idOf(r.getStruct(3)))))
         return None
-      if (minus(spOld, spNew).exists(p => fpCone(idOf(p._2))) ||
-          minus(spNew, spOld).exists(p => fpCone(idOf(p._2)))) return None
-      if (minus(ibOld, ibNew).exists(p => fpCone(idOf(p._1)) || fpCone(idOf(p._2))) ||
-          minus(ibNew, ibOld).exists(p => fpCone(idOf(p._1)) || fpCone(idOf(p._2))))
+      if ((dDel.sp ++ dAdd.sp).exists(p => fpCone(idOf(p._2)))) return None
+      if ((dDel.inv ++ dAdd.inv ++ dDel.sym ++ dAdd.sym)
+          .exists(p => fpCone(idOf(p._1)) || fpCone(idOf(p._2))))
         return None
       fpFeederTouched = fpBase.exists(p =>
         feederStates(p).exists(s => deltaPids(s._1)))
@@ -548,7 +702,7 @@ object Rdfs {
       * plus a term dictionary for the minted endpoints (they may never have
       * appeared in a sameAs partition). Premise frames follow closure()'s
       * materialization: feeder partitions translated per parity, flips drop
-      * literal objects (dInv2/dSym), FP keys on subject and requires resource
+      * literal objects (the flip rules' resourceObj), FP keys on subject and requires resource
       * objects, IFP keys on object. Pruned to the feeder partitions.
       */
     def mintedNewPairs(): (DataFrame, DataFrame) = {
@@ -623,39 +777,14 @@ object Rdfs {
         return None
     }
 
-    // ---- schema-closure diffs (driver-side, vocabulary-sized) ----
-    val dScDel = minus(scOld, scNew); val dScAdd = minus(scNew, scOld)
-    val dSpDel = minus(spOld, spNew); val dSpAdd = minus(spNew, spOld)
-    val dDomDel = minus(vOld.dom.toSeq, vNew.dom.toSeq)
-    val dDomAdd = minus(vNew.dom.toSeq, vOld.dom.toSeq)
-    val dRngDel = minus(vOld.rng.toSeq, vNew.rng.toSeq)
-    val dRngAdd = minus(vNew.rng.toSeq, vOld.rng.toSeq)
-    val dIbDel = minus(ibOld, ibNew); val dIbAdd = minus(ibNew, ibOld)
-
     // derived schema STATEMENTS (rdfs5/11 + eq swaps) lost/gained outright: the
     // new closures are already transitively complete, so no re-derivation check
-    def schemaStmts(sc2: Seq[(Row, Row)], sp2: Seq[(Row, Row)],
-                    eqcSwap: Seq[(Row, Row)], eqpSwap: Seq[(Row, Row)]): DataFrame = {
-      def f(ps: Seq[(Row, Row)], pred: String) =
-        pairsDf(spark, ps, "s", "o")
-          .select(col("s"), Term.iri(pred).as("p"), col("o"))
-      f(sc2, Term.RDFS_SUBCLASSOF)
-        .unionByName(f(sp2, Term.RDFS_SUBPROPERTYOF))
-        .unionByName(f(eqcSwap, OWL_EQCLASS))
-        .unionByName(f(eqpSwap, OWL_EQPROP))
-    }
-    val lostSchemaStmts = schemaStmts(dScDel, dSpDel,
-      minus(vOld.eqc.map(_.swap).toSeq, vNew.eqc.map(_.swap).toSeq),
-      minus(vOld.eqp.map(_.swap).toSeq, vNew.eqp.map(_.swap).toSeq))
-    val newSchemaStmts = schemaStmts(dScAdd, dSpAdd,
-      minus(vNew.eqc.map(_.swap).toSeq, vOld.eqc.map(_.swap).toSeq),
-      minus(vNew.eqp.map(_.swap).toSeq, vOld.eqp.map(_.swap).toSeq))
-
-    def keyed(df: DataFrame): DataFrame = df
-      .withColumn("__sk", col("s")("id")).withColumn("__pk", col("p")("id"))
-      .withColumn("__ok", col("o")("id"))
-    def dedupK(df: DataFrame): DataFrame =
-      keyed(df).dropDuplicates("__sk", "__pk", "__ok").drop("__sk", "__pk", "__ok")
+    val lostSchemaStmts = schemaStmts(spark, dDel.sc, dDel.sp,
+      minusPairs(vOld.eqc.map(_.swap).toSeq, vNew.eqc.map(_.swap).toSeq),
+      minusPairs(vOld.eqp.map(_.swap).toSeq, vNew.eqp.map(_.swap).toSeq))
+    val newSchemaStmts = schemaStmts(spark, dAdd.sc, dAdd.sp,
+      minusPairs(vNew.eqc.map(_.swap).toSeq, vOld.eqc.map(_.swap).toSeq),
+      minusPairs(vNew.eqp.map(_.swap).toSeq, vOld.eqp.map(_.swap).toSeq))
 
     // ---- over-delete: suspects = delta-tainted derivations under the OLD schema
     // old facts = (remaining ∪ removed); the pre-update lazy plan is never touched
@@ -748,8 +877,8 @@ object Rdfs {
         // data volume, dominating the distributed loop: 9.3M rows read but
         // 76 s wall). Distributed loops remain for partitions past the bound.
         val eCnt = eNew.count()
-        // -Dgraft.tm.cone.driverMax overrides the collect bound (tests set 0
-        // to force the distributed loops; default 2M edges)
+        // collect bound, default 2M edges (tests set graft.tm.cone.driverMax
+        // to 0 through withTmProps to force the distributed loops)
         val driverMax = tmProp("graft.tm.cone.driverMax")
           .map(_.toLong).getOrElse(2000000L)
         val driverBfs: Option[(DataFrame, DataFrame)] =
@@ -860,7 +989,7 @@ object Rdfs {
         val dict = ckpt(tNodes.select(col("s").as("n"))
           .unionByName(tNodes.select(col("o").as("n")))
           .withColumn("nid", col("n")("id")).dropDuplicates("nid"))
-        val transRows = (vOld.transProps ++ vNew.transProps ++ oldOnlyTransRows)
+        val transRows = (vOld.transProps ++ vNew.transProps ++ transOldRows)
           .filter(r => transTouched(idOf(r)))
           .map(r => idOf(r) -> r).toMap.values.toSeq
         val pDict = pairsDf(spark, transRows.map(r => (r, r)), "pt", "pt2")
@@ -960,8 +1089,8 @@ object Rdfs {
         // longer the fallback for sheer class size; only the all-pairs
         // ESTIMATE blowing past its own valve (a mega-class whose pair set
         // approaches corpus scale) still routes there.
-        // -Dgraft.tm.sa.driverMax overrides the collect bound (tests set 0 to
-        // force the distributed class diff)
+        // tests set graft.tm.sa.driverMax to 0 through withTmProps to force
+        // the distributed class diff
         val cap = tmProp("graft.tm.sa.driverMax")
           .map(_.toInt).getOrElse(2000000)
         val (oldArr, newArr, remArr) = (
@@ -1005,7 +1134,7 @@ object Rdfs {
             val members = comps
               .select(col("component").as("__c"), col("vertex").as("nid"))
             // pair-count valve on the ESTIMATE (Σ size²) before the self-join
-            // mints a quadratic frame; -Dgraft.tm.sa.pairCap overrides
+            // mints a quadratic frame (graft.tm.sa.pairCap in tests)
             val pairCap = tmProp("graft.tm.sa.pairCap")
               .map(_.toLong).getOrElse(64000000L)
             val est = members.groupBy("__c").count()
@@ -1113,14 +1242,12 @@ object Rdfs {
     // transitive fixpoint after rdfs7/inverse/hasValue, so their downstream
     // entailments live only in sameAs/dom/rng/rdfs9 — feeding them to the
     // earlier arms would suspect rows the materializer never derived
-    val delSuspects = deltaDerive(spark, oldFacts, removedTaint,
-      scOld, spOld, vOld.dom.toSeq, vOld.rng.toSeq, ibOld, vOld.restrictions,
-      dScDel, dSpDel, dDomDel, dRngDel, dIbDel, saDelta.map(_.aliasOld),
-      lateTaint = lostTransSpo,
+    val delSuspects = deltaDerive(spark, oldFacts, removedTaint, sOld, dDel,
       // old EXPLICIT view for the schema arms (closure premises)
-      explicitFacts = Some(exp.select(col("s"), col("p"), col("o"), col("p_id"))
+      explicitFacts = exp.select(col("s"), col("p"), col("o"), col("p_id"))
         .unionByName(removed.filter(col("stype") =!= GraftStore.STYPE_INFERRED)
-          .select(col("s"), col("p"), col("o"), col("p")("id").as("p_id")))))
+          .select(col("s"), col("p"), col("o"), col("p")("id").as("p_id"))),
+      sa = saDelta.map(_.aliasOld), lateTaint = lostTransSpo)
     // The removed rows THEMSELVES are suspects too: an entailment whose
     // materialization was novelty-suppressed by an explicit copy must be
     // PROMOTED to Inferred when that copy is deleted but it stays derivable
@@ -1132,7 +1259,7 @@ object Rdfs {
     // retracted unless the reach retains them); their downstream entailments
     // were suspected via the lateTaint arms above
     val suspects = graft.engine.DfOps.freshLeaf(
-      dedupK(delSuspects.unionByName(lostSchemaStmts)
+      dedup(delSuspects.unionByName(lostSchemaStmts)
         .unionByName(removedTaint)
         .unionByName(lostTransSpo.getOrElse(lostSchemaStmts.limit(0)))))
     // mega-cone valve: the suspect keys broadcast into every re-derivation
@@ -1203,13 +1330,12 @@ object Rdfs {
           exp.unionByName(keptInf.filter(!col("p_id").isin(tAll: _*)))
             .unionByName(keptEdges)
         }
-      val retained = rederive(spark, base, basePre, suspects, sKeys,
-        scNew, spNew, vNew.dom.toSeq, vNew.rng.toSeq, ibNew, vNew.restrictions,
+      val retained = rederive(spark, base, basePre, suspects, sKeys, sNew,
         saDelta.map(_.aliasNew))
       // schema statements are re-derivable iff in the NEW driver-side closures
       // (rdfs5/11 run on the driver, not in rederive) — a removed-but-still-
       // derivable axiom must survive to be promoted below
-      val retainedSchema = keyed(schemaStmts(scNew, spNew,
+      val retainedSchema = keyed(schemaStmts(spark, sNew.sc, sNew.sp,
         vNew.eqc.map(_.swap).toSeq, vNew.eqp.map(_.swap).toSeq))
         .select("__sk", "__pk", "__ok")
       // transitive retention is decided by the cone pass, not the rule arms:
@@ -1239,7 +1365,7 @@ object Rdfs {
     // an explicit copy just inserted supersedes a materialized entailment:
     // drop inferred rows whose (s,p,o) is in the added buffer too (the full
     // recompute's novelty check does this implicitly)
-    val addedKeys = key3(added).select("__sk", "__pk", "__ok")
+    val addedKeys = keyed(added).select("__sk", "__pk", "__ok")
     // Retraction applies as a delta-sized TOMBSTONE (lazy broadcast anti-join
     // over the inferred branch): the mutation itself stays O(delta) — no
     // partition rewrite — and tombstoneDepth counts these layers as still at
@@ -1292,8 +1418,7 @@ object Rdfs {
     val afterLoss = afterLoss0.unionByName(promStmts)
 
     // ---- insert side: same staged pass FORWARD (added facts/schema as taint)
-    val hasInsertWork = !added.isEmpty || dScAdd.nonEmpty || dSpAdd.nonEmpty ||
-      dDomAdd.nonEmpty || dRngAdd.nonEmpty || dIbAdd.nonEmpty ||
+    val hasInsertWork = !added.isEmpty || dAdd.nonEmpty ||
       saDelta.exists(_.addSpo.isDefined)
     val freshStmts: Option[DataFrame] =
       if (!hasInsertWork) None
@@ -1351,13 +1476,10 @@ object Rdfs {
         // conclusions — they feed only sameAs/dom/rng/rdfs9
         val addedTaint = (Seq(added.select(col("s"), col("p"), col("o"))) ++
           saAdds).reduce(_.unionByName(_))
-        val newDerived = deltaDerive(spark, afterLoss, addedTaint,
-          scNew, spNew, vNew.dom.toSeq, vNew.rng.toSeq, ibNew, vNew.restrictions,
-          dScAdd, dSpAdd, dDomAdd, dRngAdd, dIbAdd, saDelta.map(_.aliasNew),
-          lateTaint = newTransSpo,
+        val newDerived = deltaDerive(spark, afterLoss, addedTaint, sNew, dAdd,
           // new EXPLICIT view (added rows live in exp) for the schema arms
-          explicitFacts = Some(
-            exp.select(col("s"), col("p"), col("o"), col("p_id"))))
+          explicitFacts = exp.select(col("s"), col("p"), col("o"), col("p_id")),
+          sa = saDelta.map(_.aliasNew), lateTaint = newTransSpo)
           .unionByName(newSchemaStmts)
           .unionByName(newTransSpo.getOrElse(newSchemaStmts.limit(0)))
           .unionByName(saAdds.reduceOption(_.unionByName(_))
@@ -1367,7 +1489,7 @@ object Rdfs {
         // conclusions' predicates, SEMI-join it against the broadcast
         // conclusion keys, and anti-join the delta-sized hit set back — the
         // store is scanned (pruned), never shuffled.
-        val ndKeys = graft.engine.DfOps.freshLeaf(keyed(dedupK(newDerived)))
+        val ndKeys = graft.engine.DfOps.freshLeaf(keyed(dedup(newDerived)))
         val ndPidRows = ndKeys.select(col("__pk")).distinct().limit(1001).collect()
         val presentScan =
           if (ndPidRows.length > 1000) afterLoss
@@ -1437,151 +1559,68 @@ object Rdfs {
     })
   }
 
-  /** Staged DELTA derivation: conclusions with ≥1 derivation (under the given
-    * schema closures, which must be pre-closed) using a fact from `taint0` or a
-    * schema pair from the `d*` diffs. Mirrors closure()'s stage order (rdfs7 →
-    * inverse/symmetric → hasValue → domain/range → rdfs9 → hasValue₂); the
-    * transitive and sameAs families are excluded by the caller's guards. Each
-    * stage's output re-feeds later stages, exactly like closure()'s fact
-    * accumulation. Facts-side scans are pruned to the diff pairs' predicate
-    * partitions; taint-side joins are broadcast over the delta. Returns (s,p,o).
+  /** Staged DELTA derivation: conclusions with ≥1 derivation (under `schema`,
+    * the side's schema) using a fact from `taint0` or a schema pair from
+    * `diff`. Runs the rule program's stages in order; each stage's output
+    * re-feeds the later stages, exactly like closure()'s fact accumulation.
+    * The transitive and sameAs families enter as `lateTaint` (the cone's
+    * reach pairs) and the `sa` alias map. Taint-side joins are broadcast over
+    * the delta; schema-side scans are pruned to the diff's partitions.
+    * Returns (s,p,o).
     */
   private def deltaDerive(spark: org.apache.spark.sql.SparkSession,
       allFacts0: DataFrame, taint0: DataFrame,
-      sc: Seq[(Row, Row)], sp: Seq[(Row, Row)],
-      dom: Seq[(Row, Row)], rng: Seq[(Row, Row)], ib: Seq[(Row, Row)],
-      restrictions: Seq[(Long, Row, Row)],
-      dSc: Seq[(Row, Row)], dSp: Seq[(Row, Row)], dDom: Seq[(Row, Row)],
-      dRng: Seq[(Row, Row)], dIb: Seq[(Row, Row)],
-      sa: Option[DataFrame] = None,
-      lateTaint: Option[DataFrame] = None,
-      explicitFacts: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    def idOf(r: Row): Long = r.getAs[Long]("id")
-    val allFacts = allFacts0.select(col("s"), col("p"), col("o"), col("p_id"))
-    // premise frame for the dSp/dIb SCHEMA arms: closure() runs rdfs7 over
-    // EXPLICIT rows only and the inverse flip over (explicit ∪ rdfs7 output),
-    // so a schema-delta arm fed from allFacts would copy/flip inferred rows
-    // (transitive pairs, dom-derived types) the materializer never touches —
-    // phantoms on the insert side. Callers pass the side's explicit view;
-    // None falls back to allFacts (over-approximation, delete-side safe).
-    val expFacts = explicitFacts
-      .map(_.select(col("s"), col("p"), col("o"), col("p_id")))
-      .getOrElse(allFacts)
+      schema: RuleSchema, diff: RuleSchema, explicitFacts: DataFrame,
+      sa: Option[DataFrame], lateTaint: Option[DataFrame]): DataFrame = {
     def spo(df: DataFrame): DataFrame =
       df.select(col("s"), col("p"), col("o"), col("p")("id").as("p_id"))
-    // fresh LocalRelation, not allFacts.limit(0): an empty frame sharing the
-    // fact scan's attribute ids poisons the sibling-union constraint rewrite
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](),
-      StructType(Seq("s", "p", "o").map(n => StructField(n, Term.schema))))
-    def dedup(df: DataFrame): DataFrame = df
-      .withColumn("__sk", col("s")("id")).withColumn("__pk", col("p")("id"))
-      .withColumn("__ok", col("o")("id"))
-      .dropDuplicates("__sk", "__pk", "__ok").drop("__sk", "__pk", "__ok")
-    def pd(ps: Seq[(Row, Row)], an: String, bn: String): DataFrame =
-      pairsDf(spark, ps, an, bn)
-    def pruned(ps: Seq[(Row, Row)]): DataFrame =
-      allFacts.filter(col("p_id").isin(ps.map(p => idOf(p._1)).distinct: _*))
-    def prunedE(ps: Seq[(Row, Row)]): DataFrame =
-      expFacts.filter(col("p_id").isin(ps.map(p => idOf(p._1)).distinct: _*))
+    val allFacts = allFacts0.select(col("s"), col("p"), col("o"), col("p_id"))
 
     var taint = spo(taint0)
+    var late: Option[DataFrame] = None
     var stages = List.empty[DataFrame]
-    def addStage(d: DataFrame): Unit = {
-      val dd = graft.engine.DfOps.freshLeaf(dedup(d))
+    def addStage(d: DataFrame, isLate: Boolean): Unit = {
+      val dd = spo(graft.engine.DfOps.freshLeaf(dedup(d)))
       stages ::= dd
-      taint = taint.unionByName(spo(dd))
+      taint = taint.unionByName(dd)
+      if (isLate) late = Some(late.fold(dd)(_.unionByName(dd)))
     }
-    def asQ(ps: Seq[(Row, Row)]): DataFrame =
-      pd(ps, "a", "b").select(col("a")("id").as("p_id"), col("b").as("q"))
 
-    // rdfs7: (x p y), p ⊑* q → (x q y)
-    if (sp.nonEmpty || dSp.nonEmpty) {
-      val viaFact = if (sp.isEmpty) empty else
-        taint.join(broadcast(asQ(sp)), Seq("p_id"))
-          .select(col("s"), col("q").as("p"), col("o"))
-      val viaSchema = if (dSp.isEmpty) empty else
-        prunedE(dSp).join(broadcast(asQ(dSp)), Seq("p_id"))
-          .select(col("s"), col("q").as("p"), col("o"))
-      addStage(viaFact.unionByName(viaSchema))
+    // Premise frame of the early stages' schema arms: closure() fires them
+    // over the EXPLICIT rows plus the earlier early stages' conclusions, so a
+    // frame fed from allFacts would join inferred rows (transitive pairs,
+    // dom-derived types) the materializer never touches — phantoms on the
+    // insert side. The side's explicit rows are pruned to the predicates the
+    // diffs can join, pulled back through the earlier stages' pairs (an
+    // inverseOf diff on q joins the rdfs7 copies into q, a symmetric diff on p
+    // joins the inverse flips into p), and pushed forward through those
+    // narrowed stages.
+    var need = Set.empty[Long]
+    val narrowed = earlyStages.reverse.map { st =>
+      val n = schema.restrict(Some(need), if (need(typeId)) None else Some(Set.empty))
+      need = need ++ st.rules.flatMap(r => diff.premisePids(r) ++ n.premisePids(r))
+      n
+    }.reverse
+    var expPrem = if (need.isEmpty) None else Some(explicitFacts
+      .select(col("s"), col("p"), col("o"), col("p_id"))
+      .filter(col("p_id").isin(need.toSeq: _*)))
+    earlyStages.zip(narrowed).foreach { case (st, n) =>
+      val viaFact = fireStage(spark, st, schema)(_ => taint)
+      val viaSchema = expPrem.flatMap(e => fireStage(spark, st, diff)(_ => e))
+      expPrem = expPrem.map(e =>
+        fireStage(spark, st, n)(_ => e).fold(e)(d => e.unionByName(spo(d))))
+      (viaFact ++ viaSchema).reduceOption(_.unionByName(_)).foreach(addStage(_, isLate = false))
     }
-    // inverse/symmetric: (x p y) → (y q x), object must be a resource
-    if (ib.nonEmpty || dIb.nonEmpty) {
-      def flip(facts: DataFrame, ps: Seq[(Row, Row)]) =
-        facts.join(broadcast(asQ(ps)), Seq("p_id"))
-          .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-          .select(col("o").as("s"), col("q").as("p"), col("s").as("o"))
-      val viaFact = if (ib.isEmpty) empty else flip(taint, ib)
-      // dInv2's input is explicit ∪ rdfs7 OUTPUT: a changed (q inv tgt) flips
-      // q's explicit rows AND the rdfs7 copies into q — expand each dIb pair
-      // over the (side-closed) sp-into set so those copies flip too, all from
-      // the EXPLICIT premise frame
-      val dIbX: Seq[(Row, Row)] = if (dIb.isEmpty) Nil else {
-        val spPairs = sp.map(p => (idOf(p._1), idOf(p._2)))
-        val rowsById = (sp.flatMap(p => Seq(p._1, p._2)) ++
-          dIb.flatMap(p => Seq(p._1, p._2))).map(r => idOf(r) -> r).toMap
-        dIb.flatMap { case (q, tgt) =>
-          val qid = idOf(q)
-          val srcs = qid +: spPairs.collect { case (a, b) if b == qid && a != qid => a }
-          srcs.distinct.map(a => (rowsById(a), tgt))
-        }.distinct
-      }
-      // a dIb SELF-pair is a SYMMETRIC mark delta (r15): closure()'s
-      // symmetric stage flips the property's ACCUMULATED rows — explicit ∪
-      // rdfs7 copies (the sp*-expanded FLIPS above) ∪ inverseOf outputs. The
-      // inverse partners' rows were flipped once by the earlier stage, so the
-      // symmetric flip lands them as STRAIGHT copies — mint those from the
-      // explicit premise expanded over each partner's own sp-into set. The
-      // non-literal filter carries the inverse stage's resource constraint.
-      val dIbStraight: Seq[(Row, Row)] = if (dIb.isEmpty) Nil else {
-        val spPairs = sp.map(p => (idOf(p._1), idOf(p._2)))
-        val rowsById = (sp.flatMap(p => Seq(p._1, p._2)) ++
-          ib.flatMap(p => Seq(p._1, p._2)) ++
-          dIb.flatMap(p => Seq(p._1, p._2))).map(r => idOf(r) -> r).toMap
-        def spInto(qid: Long): Seq[Long] =
-          qid +: spPairs.collect { case (a, b) if b == qid && a != qid => a }
-        dIb.filter(p => idOf(p._1) == idOf(p._2)).flatMap { case (p0, tgt) =>
-          val pid = idOf(p0)
-          val partners = ib.collect {
-            case (q, t2) if idOf(t2) == pid && idOf(q) != pid => idOf(q) }
-          partners.flatMap(spInto).distinct.map(a => (rowsById(a), tgt))
-        }.distinct
-      }
-      def copyS(facts: DataFrame, ps: Seq[(Row, Row)]) =
-        facts.join(broadcast(asQ(ps)), Seq("p_id"))
-          .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-          .select(col("s"), col("q").as("p"), col("o"))
-      val viaSchema = if (dIbX.isEmpty) empty else flip(prunedE(dIbX), dIbX)
-      val viaSchemaS =
-        if (dIbStraight.isEmpty) empty else copyS(prunedE(dIbStraight), dIbStraight)
-      addStage(viaFact.unionByName(viaSchema).unionByName(viaSchemaS))
-    }
-    // hasValue over tainted restriction membership (restriction set itself is
-    // delta-invariant per the caller's guards)
-    def hasValueOf(types: DataFrame): DataFrame = {
-      val rRows = restrictions.map { case (a, p, v) => Row(a, p, v) }
-      val rDf = spark.createDataFrame(spark.sparkContext.parallelize(rRows, 1),
-        StructType(Seq(StructField("tid", LongType),
-          StructField("hp", Term.schema), StructField("hv", Term.schema))))
-      types.join(broadcast(rDf), col("o")("id") === col("tid"))
-        .select(col("s"), col("hp").as("p"), col("hv").as("o"))
-    }
-    if (restrictions.nonEmpty)
-      addStage(hasValueOf(taint.filter(col("p_id") === typeId)))
     // POST-TRANSITIVE taint (the cone's lost/new reach pairs) joins here:
-    // closure() runs the transitive fixpoint after hasValue, so transitive
-    // conclusions feed sameAs/dom/rng/rdfs9 but are never re-inverted,
-    // re-copied by rdfs7, or re-fed to hasValue — feeding them to the earlier
-    // arms would derive rows the materializer does not (e.g. inverse flips of
-    // reach pairs), de-syncing the delta result from the at-rest closure.
+    // closure() runs the transitive fixpoint after the early stages, so
+    // transitive conclusions feed sameAs and the late stages but are never
+    // re-inverted, re-copied by rdfs7, or re-fed to hasValue.
     lateTaint.foreach(lt => taint = taint.unionByName(spo(lt)))
     // owl:sameAs substitution (RuleOwlSameAs2/3): tainted facts substituted
     // through the materialized all-pairs alias map — subject side then object
-    // side (non-literal), mirroring closure()'s one-pass stage order (the
-    // substituted copies then feed dom/rng/rdfs9 below, like the closure's
-    // factsForTypes). The taint is delta-sized; the alias map is a pruned
-    // partition scan keyed on node id.
+    // side (non-literal), mirroring closure()'s one-pass stage order. The
+    // taint is delta-sized; the alias map is a pruned partition scan keyed on
+    // node id.
     sa.foreach { aliasOf =>
       val aliasO = aliasOf.withColumnRenamed("alias", "alias2")
         .withColumnRenamed("xid", "yid")
@@ -1595,82 +1634,38 @@ object Rdfs {
       val both = subj.filter(col("o")("kind") =!= Term.KIND_LITERAL)
         .join(aliasO, col("o")("id") === col("yid"))
         .select(col("s"), col("p"), col("alias2").as("o"))
-      addStage(subj.unionByName(obj).unionByName(both))
+      addStage(subj.unionByName(obj).unionByName(both), isLate = false)
     }
-    // rdfs2/rdfs3: domain/range → type triples
-    if (dom.nonEmpty || rng.nonEmpty || dDom.nonEmpty || dRng.nonEmpty) {
-      def asCls(ps: Seq[(Row, Row)]): DataFrame =
-        pd(ps, "a", "c").select(col("a")("id").as("p_id"), col("c").as("cls"))
-      def domJ(facts: DataFrame, ps: Seq[(Row, Row)]) =
-        facts.join(broadcast(asCls(ps)), Seq("p_id"))
-          .select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o"))
-      def rngJ(facts: DataFrame, ps: Seq[(Row, Row)]) =
-        facts.join(broadcast(asCls(ps)), Seq("p_id"))
-          .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-          .select(col("o").as("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o"))
-      val parts = Seq(
-        if (dom.nonEmpty) Some(domJ(taint, dom)) else None,
-        if (dDom.nonEmpty) Some(domJ(pruned(dDom), dDom)) else None,
-        if (rng.nonEmpty) Some(rngJ(taint, rng)) else None,
-        if (dRng.nonEmpty) Some(rngJ(pruned(dRng), dRng)) else None).flatten
-      addStage(parts.reduce(_.unionByName(_)))
+    // late stages: the schema arms read allFacts pruned to the diff's
+    // partitions (closure() fires them over every fact); rdfs9's arm reads
+    // only the diff's source classes' type rows (the pass's one data-sized
+    // scan, pruned by the o.id filter in `fire`)
+    lateStages.foreach { st =>
+      val viaFact = (if (st.lateOnly) late else Some(taint))
+        .flatMap(t => fireStage(spark, st, schema)(_ => t))
+      val viaSchema = fireStage(spark, st, diff)(_ => allFacts)
+      (viaFact ++ viaSchema).reduceOption(_.unionByName(_)).foreach(addStage(_, isLate = true))
     }
-    // rdfs9: (x type a), a ⊑* b → (x type b)
-    if (sc.nonEmpty || dSc.nonEmpty) {
-      def r9(types: DataFrame, ps: Seq[(Row, Row)]) =
-        types.join(broadcast(pd(ps, "a", "b")
-            .select(col("a")("id").as("tid"), col("b").as("cls"))),
-          col("o")("id") === col("tid"))
-          .select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o"))
-      val viaFact = if (sc.isEmpty) empty
-        else r9(taint.filter(col("p_id") === typeId), sc)
-      // the dSc arm is the pass's one data-sized scan (the whole rdf:type
-      // partition); the join immediately keys o.id to the dSc SOURCE classes,
-      // a driver-known vocabulary-sized set — pre-filtering on it is implied
-      // by the inner join and reaches the parquet scan (row-group skipping +
-      // rows never decoded), so the pass reads the affected classes' type
-      // rows, not the partition
-      val viaSchema = if (dSc.isEmpty) empty
-        else r9(allFacts.filter(col("p_id") === typeId &&
-          col("o")("id").isin(dSc.map(p => idOf(p._1)).distinct: _*)), dSc)
-      addStage(viaFact.unionByName(viaSchema))
-    }
-    // hasValue second firing over the late (dom/rng/rdfs9-derived) type taint
-    if (restrictions.nonEmpty)
-      addStage(hasValueOf(taint.filter(col("p_id") === typeId)))
-    if (stages.isEmpty) empty else dedup(stages.reduce(_.unionByName(_)))
+    if (stages.isEmpty) emptySpo(spark)
+    else dedup(stages.reduce(_.unionByName(_)).select(col("s"), col("p"), col("o")))
   }
 
   /** Staged re-derivation RESTRICTED to the suspect set: which suspects remain
-    * derivable from `base0` under the (pre-closed) NEW schema? Premise scans are
-    * pruned to the rule's predicate partitions AND semi-joined against the
-    * broadcast suspect keys, so cost tracks the delta, not the corpus. Retained
-    * suspects re-feed later stages (a re-derived (x q y) can support a suspect
-    * domain type, etc.). Returns the retained keys (__sk,__pk,__ok).
+    * derivable from `base0` under the NEW schema? Premise scans are pruned to
+    * the rule's predicate partitions AND semi-joined against the broadcast
+    * suspect keys, so cost tracks the delta, not the corpus. Retained
+    * suspects re-enter the premises of every later stage (a re-derived
+    * (x q y) can support a suspect domain type, etc.), so a suspect
+    * supported only through a promoted intermediate is found at stage depth,
+    * no fixpoint needed. Returns the retained keys (__sk,__pk,__ok).
     */
   private def rederive(spark: org.apache.spark.sql.SparkSession,
       base0: DataFrame, basePre0: DataFrame,
       suspects: DataFrame, sKeys: DataFrame,
-      sc: Seq[(Row, Row)], sp: Seq[(Row, Row)],
-      dom: Seq[(Row, Row)], rng: Seq[(Row, Row)], ib: Seq[(Row, Row)],
-      restrictions: Seq[(Long, Row, Row)],
-      sa: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    def idOf(r: Row): Long = r.getAs[Long]("id")
-    def keyed(df: DataFrame): DataFrame = df
-      .withColumn("__sk", col("s")("id")).withColumn("__pk", col("p")("id"))
-      .withColumn("__ok", col("o")("id"))
+      schema0: RuleSchema, sa: Option[DataFrame]): DataFrame = {
     var base = base0.select(col("s"), col("p"), col("o"), col("p_id"))
-    // premise base for the pre-transitive arms (see the caller's basePre):
-    // grows with arm-retained conclusions exactly like `base` — an arm's
-    // retention is available to every LATER arm, mirroring closure()'s staging
+    // premise base for the early stages (see the caller's basePre)
     var basePre = basePre0.select(col("s"), col("p"), col("o"), col("p_id"))
-    // fresh LocalRelation (see deltaDerive's `empty` note)
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](),
-      StructType(Seq("s", "p", "o").map(n => StructField(n, Term.schema))))
-    def pd(ps: Seq[(Row, Row)], an: String, bn: String): DataFrame =
-      pairsDf(spark, ps, an, bn)
     // suspect-key probes for premise pruning (all delta-sized, broadcast)
     val suspPairs = suspects
       .select(col("s")("id").as("__sk"), col("o")("id").as("__ok")).distinct()
@@ -1694,34 +1689,19 @@ object Rdfs {
     val suspCls: Option[Set[Long]] =
       if (suspClsRows.length > 1000) None
       else Some(suspClsRows.map(_.getLong(0)).toSet)
-    def byConcl(ps: Seq[(Row, Row)], rel: Option[Set[Long]]): Seq[(Row, Row)] =
-      rel match {
-        case Some(ids) => ps.filter(p => ids(idOf(p._2)))
-        case None => ps
-      }
-    val sp2 = byConcl(sp, suspPks)
-    val ib2 = byConcl(ib, suspPks)
-    val dom2 = byConcl(dom, suspCls)
-    val rng2 = byConcl(rng, suspCls)
-    val sc2 = byConcl(sc, suspCls)
-    val restrictions2 = suspPks match {
-      case Some(ids) => restrictions.filter(r => ids(idOf(r._2)))
-      case None => restrictions
-    }
+    val schema = schema0.restrict(suspPks, suspCls)
 
-    def prunedBy(ps: Seq[(Row, Row)]): DataFrame =
-      base.filter(col("p_id").isin(ps.map(p => idOf(p._1)).distinct: _*))
-    def prunedByPre(ps: Seq[(Row, Row)]): DataFrame =
-      basePre.filter(col("p_id").isin(ps.map(p => idOf(p._1)).distinct: _*))
-    def asQ(ps: Seq[(Row, Row)]): DataFrame =
-      pd(ps, "a", "b").select(col("a")("id").as("p_id"), col("b").as("q"))
+    // a premise is relevant iff its conclusion can be a suspect: keyed on the
+    // conclusion's (s, o) when both come from the premise (rdfs7, the flips),
+    // else on its subject among the suspects' (type) subjects
+    def relevant(rule: Rule, prem: DataFrame): DataFrame =
+      if (rule.o == "s" || rule.o == "o")
+        prem.join(broadcast(suspPairs),
+          col(rule.s)("id") === col("__sk") && col(rule.o)("id") === col("__ok"), "left_semi")
+      else prem.join(broadcast(if (rule.p.isEmpty) suspTypeSubj else suspSubj),
+        col(rule.s)("id") === col("__sid"), "left_semi")
 
-    // Staged keeps in closure()'s exact rule order: each retained conclusion
-    // re-enters `base` before the stages it can support (dom before rdfs9
-    // before hasValue2), which mirrors the materializer's derivation power —
-    // a suspect supported only through a promoted intermediate is found at
-    // stage depth, no fixpoint needed.
-    var retainedAcc = keyed(empty).select("__sk", "__pk", "__ok")
+    var retainedAcc = keyed(emptySpo(spark)).select("__sk", "__pk", "__ok")
     def keep(concl: DataFrame): Unit = {
       val hit = graft.engine.DfOps.freshLeaf(keyed(concl)
         .join(broadcast(sKeys), Seq("__sk", "__pk", "__ok"), "left_semi")
@@ -1732,112 +1712,45 @@ object Rdfs {
       base = base.unionByName(hitSpo)
       basePre = basePre.unionByName(hitSpo)
     }
-    def stages(): Seq[Option[DataFrame]] = {
-      val arms = Seq(
-        // rdfs7: premise (x p y) relevant iff some suspect shares (x, y).
-        // PRE-TRANSITIVE arm — premises from basePre (no transitive-fixpoint
-        // pairs; closure() runs rdfs7/inverse/hasValue before transitivity)
-        if (sp2.isEmpty) None else Some(
-          prunedByPre(sp2)
-            .join(broadcast(suspPairs),
-              col("s")("id") === col("__sk") && col("o")("id") === col("__ok"),
-              "left_semi")
-            .join(broadcast(asQ(sp2)), Seq("p_id"))
-            .select(col("s"), col("q").as("p"), col("o"))),
-        // inverse/symmetric: premise (y p x) vs suspect (x q y) — flipped probe
-        if (ib2.isEmpty) None else Some(
-          prunedByPre(ib2)
-            .join(broadcast(suspPairs),
-              col("o")("id") === col("__sk") && col("s")("id") === col("__ok"),
-              "left_semi")
-            .join(broadcast(asQ(ib2)), Seq("p_id"))
-            .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-            .select(col("o").as("s"), col("q").as("p"), col("s").as("o"))),
-        // hasValue: premise (x type R) relevant iff x is a suspect subject
-        if (restrictions2.isEmpty) None else Some {
-          val rRows = restrictions2.map { case (a, p, v) => Row(a, p, v) }
-          val rDf = spark.createDataFrame(spark.sparkContext.parallelize(rRows, 1),
-            StructType(Seq(StructField("tid", LongType),
-              StructField("hp", Term.schema), StructField("hv", Term.schema))))
-          basePre.filter(col("p_id") === typeId)
-            .join(broadcast(suspSubj), col("s")("id") === col("__sid"), "left_semi")
-            .join(broadcast(rDf), col("o")("id") === col("tid"))
-            .select(col("s"), col("hp").as("p"), col("hv").as("o"))
-        },
-        // sameAs substitution: a suspect (x' p y) is retained iff a surviving
-        // fact (x p y) has x' among x's NEW aliases (mirror for the object
-        // side). Premises are pruned to the suspects' predicate partitions AND
-        // semi-joined by the suspects' (p,o) / (s,p) key pairs BEFORE the
-        // alias join, so cost tracks the suspects, not the partitions.
-        sa.map { aliasOf =>
-          val s0 = suspects.filter(col("p")("id") =!= sameAsId)
-          val po = s0.select(col("p")("id").as("__qpk"), col("o")("id").as("__qok"))
-            .distinct()
-          val sp0 = s0.select(col("s")("id").as("__qsk"), col("p")("id").as("__qpk2"))
-            .distinct()
-          val prem = (suspPks match {
-            case Some(ids) => base.filter(col("p_id").isin(ids.toSeq: _*))
-            case None => base
-          }).filter(col("p_id") =!= sameAsId)
-          val subj = prem.join(broadcast(po),
-              col("p")("id") === col("__qpk") && col("o")("id") === col("__qok"),
-              "left_semi")
-            .join(aliasOf, col("s")("id") === col("xid"))
-            .select(col("alias").as("s"), col("p"), col("o"))
-          val aliasO = aliasOf.withColumnRenamed("alias", "alias2")
-            .withColumnRenamed("xid", "yid")
-          val obj = prem.filter(col("o")("kind") =!= Term.KIND_LITERAL)
-            .join(broadcast(sp0),
-              col("s")("id") === col("__qsk") && col("p")("id") === col("__qpk2"),
-              "left_semi")
-            .join(aliasO, col("o")("id") === col("yid"))
-            .select(col("s"), col("p"), col("alias2").as("o"))
-          // both-sided orbit: premise pruned to the suspect predicates only
-          // (neither endpoint key survives the double substitution)
-          val both = prem.filter(col("o")("kind") =!= Term.KIND_LITERAL)
-            .join(aliasOf, col("s")("id") === col("xid"))
-            .select(col("alias").as("s"), col("p"), col("o"))
-            .join(aliasO, col("o")("id") === col("yid"))
-            .select(col("s"), col("p"), col("alias2").as("o"))
-          subj.unionByName(obj).unionByName(both)
-        },
-        // rdfs2/3: premise relevance keyed on the suspect TYPE subjects
-        if (dom2.isEmpty) None else Some(
-          prunedBy(dom2)
-            .join(broadcast(suspTypeSubj), col("s")("id") === col("__sid"), "left_semi")
-            .join(broadcast(pd(dom2, "a", "c")
-              .select(col("a")("id").as("p_id"), col("c").as("cls"))), Seq("p_id"))
-            .select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o"))),
-        if (rng2.isEmpty) None else Some(
-          prunedBy(rng2)
-            .join(broadcast(suspTypeSubj), col("o")("id") === col("__sid"), "left_semi")
-            .join(broadcast(pd(rng2, "a", "c")
-              .select(col("a")("id").as("p_id"), col("c").as("cls"))), Seq("p_id"))
-            .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-            .select(col("o").as("s"), Term.iri(Term.RDF_TYPE).as("p"),
-              col("cls").as("o"))),
-        // rdfs9: premise (x type a) relevant iff x is a suspect type subject.
-        // The o.id pre-filter (the sc2 SOURCE classes, driver-known and
-        // vocabulary-sized) is implied by the tid join below but reaches the
-        // parquet scan — without it this arm re-reads the whole rdf:type
-        // partition, the re-derivation pass's one data-sized scan
-        if (sc2.isEmpty) None else Some(
-          base.filter(col("p_id") === typeId &&
-              col("o")("id").isin(sc2.map(p => idOf(p._1)).distinct: _*))
-            .join(broadcast(suspTypeSubj), col("s")("id") === col("__sid"), "left_semi")
-            .join(broadcast(pd(sc2, "a", "b")
-              .select(col("a")("id").as("tid"), col("b").as("cls"))),
-              col("o")("id") === col("tid"))
-            .select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o")))
-      )
-      arms
+    earlyStages.foreach(st => fireStage(spark, st, schema)(r => relevant(r, basePre)).foreach(keep))
+    // sameAs substitution: a suspect (x' p y) is retained iff a surviving
+    // fact (x p y) has x' among x's NEW aliases (mirror for the object
+    // side). Premises are pruned to the suspects' predicate partitions AND
+    // semi-joined by the suspects' (p,o) / (s,p) key pairs BEFORE the
+    // alias join, so cost tracks the suspects, not the partitions.
+    sa.foreach { aliasOf =>
+      val s0 = suspects.filter(col("p")("id") =!= sameAsId)
+      val po = s0.select(col("p")("id").as("__qpk"), col("o")("id").as("__qok"))
+        .distinct()
+      val sp0 = s0.select(col("s")("id").as("__qsk"), col("p")("id").as("__qpk2"))
+        .distinct()
+      val prem = (suspPks match {
+        case Some(ids) => base.filter(col("p_id").isin(ids.toSeq: _*))
+        case None => base
+      }).filter(col("p_id") =!= sameAsId)
+      val subj = prem.join(broadcast(po),
+          col("p")("id") === col("__qpk") && col("o")("id") === col("__qok"),
+          "left_semi")
+        .join(aliasOf, col("s")("id") === col("xid"))
+        .select(col("alias").as("s"), col("p"), col("o"))
+      val aliasO = aliasOf.withColumnRenamed("alias", "alias2")
+        .withColumnRenamed("xid", "yid")
+      val obj = prem.filter(col("o")("kind") =!= Term.KIND_LITERAL)
+        .join(broadcast(sp0),
+          col("s")("id") === col("__qsk") && col("p")("id") === col("__qpk2"),
+          "left_semi")
+        .join(aliasO, col("o")("id") === col("yid"))
+        .select(col("s"), col("p"), col("alias2").as("o"))
+      // both-sided orbit: premise pruned to the suspect predicates only
+      // (neither endpoint key survives the double substitution)
+      val both = prem.filter(col("o")("kind") =!= Term.KIND_LITERAL)
+        .join(aliasOf, col("s")("id") === col("xid"))
+        .select(col("alias").as("s"), col("p"), col("o"))
+        .join(aliasO, col("o")("id") === col("yid"))
+        .select(col("s"), col("p"), col("alias2").as("o"))
+      keep(subj.unionByName(obj).unionByName(both))
     }
-    // closure() stage order: rdfs7 → inverse/symmetric → hasValue → sameAs →
-    // dom → rng → rdfs9; arms are rebuilt against the grown `base` at each
-    // step, and the hasValue arm re-fires once more at the end (the second
-    // firing over re-derived types, like the materializer)
-    for (i <- 0 until 7) stages()(i).foreach(keep)
-    stages()(2).foreach(keep)
+    lateStages.foreach(st => fireStage(spark, st, schema)(r => relevant(r, base)).foreach(keep))
     retainedAcc
   }
 
@@ -1966,13 +1879,13 @@ object Rdfs {
     // owl:hasValue restrictions (RuleOwlHasValue): a type owl:Restriction,
     // a owl:onProperty p, a owl:hasValue v — vocabulary-sized, keyed by a.id
     val restrictions: Seq[(Long, Row, Row)] = {
-      val onP = schema(onPropertyId).map { case (a, p) => a.getAs[Long]("id") -> p }.toMap
-      val hv = schema(hasValueId).map { case (a, v) => a.getAs[Long]("id") -> v }.toMap
+      val onP = schema(onPropertyId).map { case (a, p) => idOf(a) -> p }.toMap
+      val hv = schema(hasValueId).map { case (a, v) => idOf(a) -> v }.toMap
       if (onP.isEmpty || hv.isEmpty) Nil
       else {
         val isRestriction = vocabRows
           .filter(r => r.getLong(0) == typeId && r.getLong(3) == restrictionId)
-          .map(_.getStruct(1).getAs[Long]("id")).toSet
+          .map(r => idOf(r.getStruct(1))).toSet
         (onP.keySet intersect hv.keySet).toSeq.filter(isRestriction)
           .map(a => (a, onP(a), hv(a)))
       }
@@ -1997,115 +1910,46 @@ object Rdfs {
     val spark = store.spark
     val stmts = store.statements
     val v = collectVocab(stmts)
-    val eqc = v.eqc
-    val eqp = v.eqp
-    val sc = v.sc
-    val sp = v.sp
-    val dom = v.dom
-    val rng = v.rng
-    val inv = v.inv
+    val schema = RuleSchema.of(v, v.symProps)
     val transProps = v.transProps
-    val symProps = v.symProps
     val funcProps = v.funcProps
     val invFuncProps = v.invFuncProps
-    val restrictions = v.restrictions
     val hasSameAs = stmts.filter(col("p_id") === sameAsId).limit(1).count() > 0 ||
       funcProps.nonEmpty || invFuncProps.nonEmpty
-    if (sc.isEmpty && sp.isEmpty && dom.isEmpty && rng.isEmpty && inv.isEmpty &&
-        transProps.isEmpty && symProps.isEmpty && restrictions.isEmpty && !hasSameAs)
+    if (!schema.nonEmpty && transProps.isEmpty && !hasSameAs)
       return store
-
-    val termType = Term.schema
-    def pairsDf(pairs: Seq[(Row, Row)], an: String, bn: String): DataFrame =
-      Rdfs.pairsDf(spark, pairs, an, bn)
-
-    val scC = transitiveRows(sc)
-    val spC = transitiveRows(sp)
-    val spo = stmts.select(col("s"), col("p"), col("o"), col("p_id"))
 
     var derived = Seq.empty[DataFrame]
     // rdfs5/11 (+owl equivalence): schema closures themselves (vocabulary-sized)
-    if ((sc ++ scC).nonEmpty) derived :+= pairsDf((sc ++ scC).toSeq, "s", "o")
-      .select(col("s"), Term.iri(Term.RDFS_SUBCLASSOF).as("p"), col("o"))
-    if ((sp ++ spC).nonEmpty) derived :+= pairsDf((sp ++ spC).toSeq, "s", "o")
-      .select(col("s"), Term.iri(Term.RDFS_SUBPROPERTYOF).as("p"), col("o"))
-    if (eqc.nonEmpty) derived :+= pairsDf(eqc.map(_.swap).toSeq, "s", "o")
-      .select(col("s"), Term.iri(OWL_EQCLASS).as("p"), col("o"))
-    if (eqp.nonEmpty) derived :+= pairsDf(eqp.map(_.swap).toSeq, "s", "o")
-      .select(col("s"), Term.iri(OWL_EQPROP).as("p"), col("o"))
-
-    // rdfs7: (x p y), (p subPropertyOf* q) → (x q y) — one broadcast join.
-    // Materialized ONCE like dInv2: the delta feeds `facts`, which fans out to
-    // domain/range, rdfs9, FP/IFP, transitive, hasValue AND the novelty union —
-    // a consumer's p_id filter cannot prune this branch (the derived p comes from
-    // the broadcast side), so lazily it re-runs the data-sized join per consumer.
-    val rdfs7 = if (sp.isEmpty) None else {
-      val spAll = pairsDf(sp.toSeq ++ spC, "sp_s", "sp_o").dropDuplicates("sp_s", "sp_o")
-        .select(col("sp_s")("id").as("p_id"), col("sp_o").as("q"))
-      Some(spo.join(broadcast(spAll), Seq("p_id"))
-        .select(col("s"), col("q").as("p"), col("o")).localCheckpoint())
-    }
-    rdfs7.foreach(d => derived :+= d)
+    val eqcSwap = v.eqc.map(_.swap).toSeq
+    val eqpSwap = v.eqp.map(_.swap).toSeq
+    if ((schema.sc ++ schema.sp ++ eqcSwap ++ eqpSwap).nonEmpty)
+      derived :+= schemaStmts(spark, schema.sc, schema.sp, eqcSwap, eqpSwap)
 
     def withPid(d: DataFrame): DataFrame =
       d.select(col("s"), col("p"), col("o"), col("p")("id").as("p_id"))
-    var facts = (spo +: rdfs7.map(withPid).toSeq)
-      .map(graft.engine.DfOps.reid).reduce(_.unionByName(_))
+    var facts = graft.engine.DfOps.reid(stmts.select(col("s"), col("p"), col("o"), col("p_id")))
 
-    // RuleOwlInverseOf1/2: (p owl:inverseOf q), (x p y) → (y q x) (and symmetric)
-    if (inv.nonEmpty) {
-      val invBoth = pairsDf(inv.toSeq, "i_p", "i_q")
-        .select(col("i_p")("id").as("p_id"), col("i_q").as("q"))
-        .unionByName(pairsDf(inv.toSeq, "i_p", "i_q")
-          .select(col("i_q")("id").as("p_id"), col("i_p").as("q")))
-        .dropDuplicates("p_id", "q")
-      // (y q x): subject = old object, object = old subject. Materialized ONCE:
-      // the inverse delta feeds ≥3 downstream consumers (domain/range, rdfs9, the
-      // novelty anti-join) which would otherwise each recompute the data-sized join
-      val dInv2 = facts.join(broadcast(invBoth), Seq("p_id"))
-        .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-        .select(col("o").as("s"), col("q").as("p"), col("s").as("o"))
-        .localCheckpoint()
-      derived :+= dInv2
-      facts = facts.unionByName(withPid(graft.engine.DfOps.reid(dInv2)))
-    }
-
-    // RuleOwlSymmetricProperty: (p a owl:SymmetricProperty), (x p y) → (y p x) —
-    // the self-inverse special case, same single pruned-scan shape as inverseOf
-    if (symProps.nonEmpty) {
-      val sIds = symProps.map(_.getAs[Long]("id")).toSeq
-      val dSym = facts.filter(col("p_id").isin(sIds: _*) &&
-          col("o")("kind") =!= Term.KIND_LITERAL)
-        .select(col("o").as("s"), col("p"), col("s").as("o"))
-        .localCheckpoint()
-      derived :+= dSym
-      facts = facts.unionByName(withPid(graft.engine.DfOps.reid(dSym)))
-    }
-
-    // RuleOwlHasValue: (x rdf:type a), (a rdf:type owl:Restriction),
-    // (a owl:onProperty p), (a owl:hasValue v) → (x p v). Restrictions are
-    // vocabulary-sized → broadcast onto the type partition scan.
-    if (restrictions.nonEmpty) {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val rRows = restrictions.map { case (a, p, v) => Row(a, p, v) }
-      val rDf = spark.createDataFrame(spark.sparkContext.parallelize(rRows, 1),
-        StructType(Seq(StructField("tid", LongType),
-          StructField("hp", termType), StructField("hv", termType))))
-      val dHas = facts.filter(col("p_id") === typeId)
-        .join(broadcast(rDf), col("o")("id") === col("tid"))
-        .select(col("s"), col("hp").as("p"), col("hv").as("o"))
-        .localCheckpoint()
-      derived :+= dHas
-      facts = facts.unionByName(withPid(graft.engine.DfOps.reid(dHas)))
+    // Early stages over every fact so far. Each stage's conclusions are
+    // materialized ONCE: they feed the later stages, FP/IFP, the transitive
+    // fixpoint AND the novelty union, and a consumer's p_id filter cannot
+    // prune a branch whose derived p comes from the broadcast side — lazily
+    // the data-sized join would re-run per consumer.
+    earlyStages.foreach { st =>
+      fireStage(spark, st, schema)(_ => facts).foreach { d0 =>
+        val d = d0.localCheckpoint()
+        derived :+= d
+        facts = facts.unionByName(withPid(graft.engine.DfOps.reid(d)))
+      }
     }
 
     // RuleOwlTransitiveProperty1/2: per transitive property, id-space fixpoint
     if (transProps.nonEmpty) {
-      val tIds = transProps.map(_.getAs[Long]("id")).toSeq
+      val tIds = transProps.map(idOf).toSeq
       val tEdges = facts.filter(col("p_id").isin(tIds: _*))
       val dict = tEdges.select(col("s").as("n")).unionByName(tEdges.select(col("o").as("n")))
         .withColumn("nid", col("n")("id")).dropDuplicates("nid").localCheckpoint()
-      val pDict = pairsDf(transProps.map(r => (r, r)).toSeq, "pt", "pt2")
+      val pDict = pairsDf(spark, transProps.map(r => (r, r)).toSeq, "pt", "pt2")
         .select(col("pt")("id").as("p_id"), col("pt").as("pterm")).dropDuplicates("p_id")
       val edges0 = tEdges
         .select(col("p_id"), col("s")("id").as("a"), col("o")("id").as("b"))
@@ -2126,7 +1970,7 @@ object Rdfs {
         .join(dict.select(col("nid").as("b"), col("n").as("o")), Seq("b"))
         .join(broadcast(pDict), Seq("p_id"))
         .select(col("s"), col("pterm").as("p"), col("o"))
-        .localCheckpoint() // multi-consumer delta (see dInv2)
+        .localCheckpoint() // multi-consumer delta (see the early stages)
       derived :+= dTrans
       facts = facts.unionByName(withPid(graft.engine.DfOps.reid(dTrans)))
     }
@@ -2144,7 +1988,7 @@ object Rdfs {
       // b≠c → (b sameAs c). Self-join keyed on (p_id, subject id) — shuffles only
       // the functional-property facts, linear in their count.
       val fpSa = if (funcProps.isEmpty) None else {
-        val ids = funcProps.map(_.getAs[Long]("id")).toSeq
+        val ids = funcProps.map(idOf).toSeq
         val f = facts.filter(col("p_id").isin(ids: _*) &&
             col("o")("kind") =!= Term.KIND_LITERAL)
           .select(col("p_id"), col("s")("id").as("k"), col("o"))
@@ -2156,7 +2000,7 @@ object Rdfs {
       // RuleOwlInverseFunctionalProperty: (a p b), (c p b), a≠c → (a sameAs c) —
       // the mirror image, keyed on (p_id, object id)
       val ifpSa = if (invFuncProps.isEmpty) None else {
-        val ids = invFuncProps.map(_.getAs[Long]("id")).toSeq
+        val ids = invFuncProps.map(idOf).toSeq
         val f = facts.filter(col("p_id").isin(ids: _*))
           .select(col("p_id"), col("o")("id").as("k"), col("s"))
         Some(f.select(col("p_id"), col("k"), col("s").as("b"))
@@ -2187,7 +2031,7 @@ object Rdfs {
       val subjSub = facts.filter(col("p_id") =!= sameAsId)
         .join(broadcast(aliasOf), col("s")("id") === col("xid"))
         .select(col("alias").as("s"), col("p"), col("o"))
-        .localCheckpoint() // multi-consumer delta (see dInv2)
+        .localCheckpoint() // multi-consumer delta (see the early stages)
       val objSub = facts.filter(col("p_id") =!= sameAsId &&
           col("o")("kind") =!= Term.KIND_LITERAL)
         .join(broadcast(aliasOf), col("o")("id") === col("xid"))
@@ -2213,63 +2057,24 @@ object Rdfs {
         .unionByName(withPid(graft.engine.DfOps.reid(objSub)))
     }
 
-    // facts incl. property/owl entailments feed domain/range/type rules
-    val factsForTypes = facts.select(col("s"), col("p_id").as("pid"), col("o"))
-
-    // rdfs2/rdfs3: domain/range → type triples (broadcast joins)
-    var typeCandidates = Seq.empty[DataFrame]
-    if (dom.nonEmpty) {
-      val dm = pairsDf(dom.toSeq, "d_p", "d_c")
-        .select(col("d_p")("id").as("pid"), col("d_c").as("cls"))
-      typeCandidates :+= factsForTypes.join(broadcast(dm), Seq("pid"))
-        .select(col("s"), col("cls"))
-    }
-    if (rng.nonEmpty) {
-      val rn = pairsDf(rng.toSeq, "r_p", "r_c")
-        .select(col("r_p")("id").as("pid"), col("r_c").as("cls"))
-      typeCandidates :+= factsForTypes.join(broadcast(rn), Seq("pid"))
-        .filter(col("o")("kind") =!= Term.KIND_LITERAL)
-        .select(col("o").as("s"), col("cls"))
-    }
-    typeCandidates.foreach(tc => derived :+=
-      tc.select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o")))
-
-    // rdfs9: (x type a), (a subClassOf* b) → (x type b) — over explicit + derived types
-    var lateTypes = typeCandidates // (s, cls) pairs derived AFTER the property rules
-    if (sc.nonEmpty) {
-      val scAll = pairsDf(sc.toSeq ++ scC, "c_a", "c_b").dropDuplicates("c_a", "c_b")
-        .select(col("c_a")("id").as("tid"), col("c_b").as("cls"))
-      val allTypes = (facts.filter(col("p_id") === typeId).select(col("s"), col("o")) +:
-        typeCandidates.map(_.select(col("s"), col("cls").as("o"))))
-        .map(graft.engine.DfOps.reid).reduce(_.unionByName(_))
-      val r9 = allTypes.select(col("s"), col("o")("id").as("tid"))
-        .join(broadcast(scAll), Seq("tid"))
-        .select(col("s"), col("cls"))
-      derived :+= r9.select(col("s"), Term.iri(Term.RDF_TYPE).as("p"), col("cls").as("o"))
-      lateTypes :+= r9
-    }
-
-    // RuleOwlHasValue, second application: the first firing runs BEFORE the type
-    // rules, so restriction membership derived by rdfs2/rdfs3/rdfs9 (x type R from
-    // domain/range/subclass) never met the hasValue check. The reference's rule
-    // program iterates to fixpoint; this staged re-application (one more broadcast
-    // join over the late type delta) covers the derived-type → restriction case.
-    // Deeper chains — hasValue output re-feeding rdfs2/3, FP/IFP sameAs cascades
-    // over substituted facts — remain staged-incomplete: see SCALE.md §OWL.
-    if (restrictions.nonEmpty && lateTypes.nonEmpty) {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val rRows2 = restrictions.map { case (a, p, v) => Row(a, p, v) }
-      val rDf2 = spark.createDataFrame(spark.sparkContext.parallelize(rRows2, 1),
-        StructType(Seq(StructField("tid", LongType),
-          StructField("hp", termType), StructField("hv", termType))))
-      val late = lateTypes.map(graft.engine.DfOps.reid).reduce(_.unionByName(_))
-      derived :+= late.join(broadcast(rDf2), col("cls")("id") === col("tid"))
-        .select(col("s"), col("hp").as("p"), col("hv").as("o"))
+    // Late stages over every fact incl. the property/owl entailments; the
+    // lateOnly hasValue firing reads just the late stages' types
+    // (restriction membership derived by rdfs2/rdfs3/rdfs9)
+    var late: Option[DataFrame] = None
+    lateStages.foreach { st =>
+      (if (st.lateOnly) late else Some(facts))
+        .flatMap(prem => fireStage(spark, st, schema)(_ => prem))
+        .foreach { d =>
+          derived :+= d
+          val dp = withPid(graft.engine.DfOps.reid(d))
+          facts = facts.unionByName(dp)
+          late = Some(late.fold(dp)(_.unionByName(dp)))
+        }
     }
 
     if (derived.isEmpty) return store
     // dedup + novelty anti-join in id space: 24-byte keys, not wide term structs
-    val keyed = derived.map(d => graft.engine.DfOps.reid(d.select("s", "p", "o")))
+    val derivedKeys = derived.map(d => graft.engine.DfOps.reid(d.select("s", "p", "o")))
       .reduce(_.unionByName(_))
       .withColumn("sk", col("s")("id")).withColumn("pk", col("p")("id"))
       .withColumn("ok", col("o")("id"))
@@ -2282,16 +2087,13 @@ object Rdfs {
     val derivedPids: Option[Seq[Long]] =
       if (sameAsActive) None
       else Some((Seq(subClassId, subPropId, eqClassId, eqPropId, typeId) ++
-        (sp ++ spC).map(_._2.getAs[Long]("id")) ++
-        inv.flatMap(p => Seq(p._1.getAs[Long]("id"), p._2.getAs[Long]("id"))) ++
-        transProps.map(_.getAs[Long]("id")) ++
-        symProps.map(_.getAs[Long]("id")) ++
-        restrictions.map(_._2.getAs[Long]("id"))).distinct)
+        (schema.sp ++ schema.inv ++ schema.sym).map(p => idOf(p._2)) ++
+        transProps.map(idOf) ++ schema.hv.map(r => idOf(r._2))).distinct)
     val existing = derivedPids match {
       case Some(pids) => stmts.filter(col("p_id").isin(pids: _*))
       case None => stmts
     }
-    val allDerived = keyed.join(
+    val allDerived = derivedKeys.join(
       existing.select(col("s")("id").as("sk"), col("p_id").as("pk"), col("o")("id").as("ok")),
       Seq("sk", "pk", "ok"), "left_anti")
       .drop("sk", "pk", "ok")

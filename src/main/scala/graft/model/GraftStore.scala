@@ -585,6 +585,17 @@ object GraftStore {
     s.conf.getOption("spark.sql.codegen.wholeStage").contains("false") &&
       s.conf.getOption("spark.sql.codegen.factoryMode").contains("NO_CODEGEN")
 
+  /** `spark.newSession()` with the caller's runtime SQL conf copied in. */
+  private[graft] def siblingSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    // runtime keys the caller set (a static or core key is the same in
+    // both sessions; setting one would throw)
+    val own = s.conf.getAll
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!own.get(k).contains(v)) scala.util.Try(s.conf.set(k, v)) }
+    s
+  }
+
   /** The session an at-rest store executes on: an interpreted sibling of the
     * caller's — `spark.newSession()` with the caller's runtime SQL conf copied
     * in, no whole-stage codegen and no per-expression codegen — or the
@@ -601,12 +612,7 @@ object GraftStore {
     if (runsInterpreted(spark)) spark
     else interpretedSiblings.synchronized {
       Option(interpretedSiblings.get(spark)).getOrElse {
-        val s = spark.newSession()
-        // runtime keys the caller set (a static or core key is the same in
-        // both sessions; setting one would throw)
-        val own = s.conf.getAll
-        spark.conf.getAll.foreach { case (k, v) =>
-          if (!own.get(k).contains(v)) scala.util.Try(s.conf.set(k, v)) }
+        val s = siblingSession(spark)
         s.conf.set("spark.sql.codegen.wholeStage", "false")
         s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
         interpretedSiblings.put(spark, s)

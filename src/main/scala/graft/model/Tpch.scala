@@ -177,9 +177,7 @@ object Tpch {
         // sf0.1. Same shape a cluster bulk load takes: land the normalized table
         // and fan out index builds over it (the reference's DataLoader maintains
         // its lexicon and text index inside the load pass).
-        // Scratch-space pressure governs two choices here (override with
-        // SPARK_GRAFT_LOAD_FANOUT / spark.graft.load.fanout =
-        // concurrent | sequential | auto):
+        // Scratch-space pressure governs two choices here:
         //  1. staging storage level — the deserialized MEMORY_AND_DISK blocks
         //     spill at ~200+ B/statement (a 76 GB block store at x30, measured);
         //     when tight, stage SERIALIZED (MEMORY_AND_DISK_SER, several× less
@@ -192,18 +190,12 @@ object Tpch {
           else f.length()
         val srcBytes = math.max(treeBytes(new java.io.File(dir)), 1L)
         val usable = new java.io.File("/tmp").getUsableSpace
-        val mode = sys.env.getOrElse("SPARK_GRAFT_LOAD_FANOUT",
-          try spark.conf.get("spark.graft.load.fanout") catch { case _: Exception => "auto" })
-        val concurrent = mode match {
-          case "concurrent" => true
-          case "sequential" => false
-          // measured at x30: concurrent deserialized spill blew a ~75 GB disk
-          // from a 461 MB source (~160× source); 200× headroom keeps the
-          // comfortable path for comfortable builds only
-          case _ => usable > 200L * srcBytes
-        }
+        // measured at x30: concurrent deserialized spill blew a ~75 GB disk
+        // from a 461 MB source (~160× source); 200× headroom keeps the
+        // comfortable path for comfortable builds only
+        val concurrent = usable > 200L * srcBytes
         System.err.println(f"[graft-load] fanout=${if (concurrent) "concurrent" else "sequential"} " +
-          f"(mode=$mode, src=${srcBytes / 1e6}%.0f MB, scratch_free=${usable / 1e9}%.1f GB)")
+          f"(src=${srcBytes / 1e6}%.0f MB, scratch_free=${usable / 1e9}%.1f GB)")
         val stagingLevel =
           if (concurrent) org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
           else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER

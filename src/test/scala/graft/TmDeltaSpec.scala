@@ -16,7 +16,7 @@ abstract class TmDeltaScenarios(part: Int, of: Int) extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
   /** Register every scenario once, but materialize only this class's modulo
-    * slice as ScalaTest cases: the file's 77 scenarios total ~43 min of
+    * slice as ScalaTest cases: the file's 79 scenarios total ~43 min of
     * Spark-fixpoint wall, which single-handedly blew the CI test budget when
     * they ran as one sequential suite. The slices are separate suites, so the
     * forked-parallel test runner executes them concurrently; names and bodies
@@ -986,6 +986,26 @@ abstract class TmDeltaScenarios(part: Int, of: Int) extends AnyFunSuite {
       """, "fp11")
     check(st, s"DELETE DATA { <urn:fp:R> a <${OWL}Restriction> . }",
       expectDelta = false)
+  }
+
+  // DATA deltas through an inverse into a symmetric property: closure() runs
+  // the inverseOf stage and then the symmetric stage, so an inverse output
+  // in a symmetric property is flipped again. The delta passes must run the
+  // same two stages (appended last so the earlier scenarios keep their slice)
+  val invSymBase = symBase.replace(":parentOf owl:inverseOf :childOf .",
+    ":parentOf owl:inverseOf :childOf .\n      :childOf a owl:SymmetricProperty .")
+
+  scenario("inverse output in a symmetric property: data delete retracts both flips") {
+    val st = atRest(invSymBase, "sy8")
+    check(st, "DELETE DATA { GRAPH <urn:sy:g> { <urn:sy:p1> <urn:sy:parentOf> <urn:sy:k1> } }")
+  }
+
+  scenario("inverse output in a symmetric property: Modify insert derives both flips") {
+    val st = atRest(invSymBase, "sy9")
+    check(st,
+      """DELETE { <urn:x:none> <urn:x:never> <urn:x:nope> . }
+        |INSERT { GRAPH <urn:sy:g> { <urn:sy:p3> <urn:sy:parentOf> <urn:sy:k3> . } }
+        |WHERE {}""".stripMargin)
   }
 }
 
