@@ -818,8 +818,8 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     // goes through seededPathIds, which keeps the full term domain for (x,x).
     case PZeroOrMore(q) =>
       val edges = pathPairIds(q, g).dropDuplicates("a", "b").localCheckpoint()
-      closureIds(edges).unionByName(pathVertexPairs(edges)).dropDuplicates("a", "b")
-    case POneOrMore(q) => closureIds(pathPairIds(q, g))
+      DfOps.closurePairs(edges).unionByName(pathVertexPairs(edges)).dropDuplicates("a", "b")
+    case POneOrMore(q) => DfOps.closurePairs(pathPairIds(q, g))
     case PZeroOrOne(q) =>
       val edges = pathPairIds(q, g).dropDuplicates("a", "b").localCheckpoint()
       pathVertexPairs(edges).unionByName(edges).dropDuplicates("a", "b")
@@ -829,33 +829,6 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
   private def pathVertexPairs(edges: DataFrame): DataFrame =
     edges.select(col("a").as("n")).unionByName(edges.select(col("b").as("n")))
       .dropDuplicates("n").select(col("n").as("a"), col("n").as("b"))
-
-  /** Semi-naive transitive closure with per-round dedup + localCheckpoint (lineage cut),
-    * the fixpoint driver of ArbitraryLengthPathTask. Input/output: (a,b) id pairs.
-    */
-  private def closureIds(edges0: DataFrame): DataFrame = {
-    // key the static edge relation on `a` ONCE (a ⊆ the dedup keys, so the distinct
-    // aggregate runs on the same exchange): every fixpoint round probes it on a=m,
-    // and a (a,b)-hashed layout would re-shuffle the full relation per round
-    val edges = edges0.repartition(col("a")).dropDuplicates("a", "b")
-      .sortWithinPartitions("a").localCheckpoint()
-    var acc = edges
-    var frontier = edges
-    var n = frontier.count()
-    while (n > 0) {
-      val stepped = frontier.select(col("a"), col("b").as("m"))
-        .join(edges.select(col("a").as("m"), col("b")), Seq("m"))
-        .select("a", "b").dropDuplicates("a", "b")
-      // LAZY checkpoint + count: one fused job per round instead of an eager
-      // materialization job followed by a count job (see Gas.bfs)
-      frontier = stepped.join(acc, Seq("a", "b"), "left_anti").localCheckpoint(false)
-      n = frontier.count()
-      // accumulator stays a lazy union tree over checkpointed frontiers — re-reads
-      // cached blocks, no per-round re-materialization
-      if (n > 0) acc = acc.unionByName(DfOps.reid(frontier))
-    }
-    acc
-  }
 
   /** True when the path can relate a node to itself with zero steps (needs the
     * graph-scoped node domain, which the seeded evaluation approximates globally).
@@ -925,22 +898,8 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
                                seedsInDomain: Boolean = false): DataFrame = {
     val raw = pathPairIds(inner, g)
     val oriented = if (fromSubject) raw else raw.select(col("b").as("a"), col("a").as("b"))
-    // keyed on `a` once — each BFS round probes edges on a=m without re-shuffling
-    // the static relation (see closureIds)
-    val edges = oriented.repartition(col("a")).dropDuplicates("a", "b")
-      .sortWithinPartitions("a").localCheckpoint()
     val seeds = seeds0.select(col("seed").as("a")).dropDuplicates("a")
-    var acc = edges.join(seeds, Seq("a")).localCheckpoint(false)
-    var frontier = acc
-    var n = frontier.count() // fused materialize+count (see closureIds)
-    while (n > 0) {
-      val stepped = frontier.select(col("a"), col("b").as("m"))
-        .join(edges.select(col("a").as("m"), col("b")), Seq("m"))
-        .select("a", "b").dropDuplicates("a", "b")
-      frontier = stepped.join(acc, Seq("a", "b"), "left_anti").localCheckpoint(false)
-      n = frontier.count()
-      if (n > 0) acc = acc.unionByName(DfOps.reid(frontier))
-    }
+    val acc = DfOps.closurePairs(oriented, seeds = Some(seeds))
     val out =
       if (!includeZero) acc
       else {
@@ -1854,9 +1813,9 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     *  - SCBD — CBD plus the reverse closure: backward links, recursing through
     *    bnode SUBJECTS (DescribeModeEnum.java:127 SCBD semantics).
     *
-    * Each expansion round is one semi-join of the (small) bnode frontier against
-    * the statement table — O(closure-depth) rounds, frontier-sized shuffles only,
-    * lineage cut per round like the other fixpoints.
+    * The bnode chase is a `DfOps.semiNaive` fixpoint over node ids: each round is
+    * one semi-join of the (small) bnode frontier against the statement table, and
+    * the answer is one more semi-join of every reached id.
     */
   def compileDescribe(q: DescribeQuery): DataFrame = {
     val mode = describeModeHint(q.where).getOrElse("CBD")
@@ -1874,29 +1833,17 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
       stmts.join(ids, col("s")("id") === col("nid"), "left_semi").select("s", "p", "o")
     def reverse(ids: DataFrame): DataFrame =
       stmts.join(ids, col("o")("id") === col("nid"), "left_semi").select("s", "p", "o")
-    /** Fixed point: expand from `start` along `step`, chasing bnodes picked out of
-      * each round's new statements by `bnodeSide`, until no unseen bnodes remain.
+    /** Fixed point: the statements `step` reaches from `startIds` and from every
+      * bnode on their `bnodeSide`, transitively (depth-bounded at 50 rounds;
+      * cycles terminate regardless, a bnode is chased once).
       */
     def closure(startIds: DataFrame, step: DataFrame => DataFrame,
-                bnodeSide: String): DataFrame = {
-      var seen = startIds.localCheckpoint()
-      var acc = step(startIds).localCheckpoint()
-      def newBnodes(df: DataFrame, seenIds: DataFrame): DataFrame = df
-        .filter(col(bnodeSide)("kind") === Term.KIND_BNODE)
-        .select(col(bnodeSide)("id").as("nid")).dropDuplicates("nid")
-        .join(seenIds, Seq("nid"), "left_anti")
-      var frontier = newBnodes(acc, seen).localCheckpoint()
-      var rounds = 0
-      val maxRounds = 50 // depth bound: cycles terminate via `seen` regardless
-      while (rounds < maxRounds && frontier.limit(1).count() > 0) {
-        val next = step(frontier)
-        seen = seen.unionByName(frontier).localCheckpoint()
-        acc = acc.unionByName(next).localCheckpoint()
-        frontier = newBnodes(next, seen).localCheckpoint()
-        rounds += 1
-      }
-      acc
-    }
+                bnodeSide: String): DataFrame =
+      step(DfOps.semiNaive(startIds.localCheckpoint(false), Seq("nid"), maxRounds = 50) {
+        (frontier, _) => step(frontier)
+          .filter(col(bnodeSide)("kind") === Term.KIND_BNODE)
+          .select(col(bnodeSide)("id").as("nid"))
+      })
     val ids = nodes.select(col("n")("id").as("nid"))
     val acc = mode match {
       case "ForwardOneStep" => forward(ids)

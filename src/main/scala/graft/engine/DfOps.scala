@@ -11,6 +11,58 @@ object DfOps {
   def reid(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
 
+  /** Semi-naive fixpoint, the one iteration driver of property paths, DESCRIBE's
+    * bnode chase, the transitive-property closure, truth maintenance's cone BFS
+    * and GAS BFS. Round 0's frontier is `init`; round r's is `step(frontier, r)`,
+    * deduplicated on `keys`, minus every row reached so far (anti-join on `keys`).
+    * Stops when a round adds nothing or after `maxRounds` rounds, and returns the
+    * reached rows as a `reid` union over the frontiers.
+    *
+    * Each frontier is a LAZY localCheckpoint that its own count() materializes:
+    * one action per round, not an eager checkpoint job plus a count job. `init`
+    * is neither counted (an empty one ends the loop after round 1) nor
+    * checkpointed, and every round's anti-join reads it: pass it distinct on
+    * `keys` and checkpointed (a lazy checkpoint is enough, round 1's count
+    * materializes it) unless it is cheap to rebuild.
+    */
+  def semiNaive(init: DataFrame, keys: Seq[String], maxRounds: Int = Int.MaxValue)
+               (step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var acc = init
+    var frontier = init
+    var n = 1L
+    var round = 0
+    while (n > 0 && round < maxRounds) {
+      round += 1
+      frontier = step(frontier, round).dropDuplicates(keys)
+        .join(acc.select(keys.map(col): _*), keys, "left_anti").localCheckpoint(false)
+      n = frontier.count()
+      if (n > 0) acc = acc.unionByName(reid(frontier))
+    }
+    acc
+  }
+
+  /** Transitive closure (paths of length ≥ 1) of (group…, a, b) edge pairs within
+    * each group, from every source or, given `seeds` (columns group… and `a`), from
+    * the seeds only. Output: the distinct reached (group…, a, b) pairs. The edge
+    * relation is keyed on group ++ a ONCE (a subset of the dedup keys, so the
+    * distinct runs on the same exchange): every round probes it on the frontier's
+    * `b`, and an (a,b)-hashed layout would re-shuffle the whole relation per round.
+    */
+  def closurePairs(edges: DataFrame, group: Seq[String] = Nil,
+                   seeds: Option[DataFrame] = None): DataFrame = {
+    val on = group :+ "a"
+    val pair = on :+ "b"
+    val keyed = edges.select(pair.map(col): _*).repartition(on.map(col): _*)
+      .dropDuplicates(pair).sortWithinPartitions(on.map(col): _*).localCheckpoint(false)
+    val init = seeds.fold(keyed)(s =>
+      keyed.join(s.select(on.map(col): _*), on, "left_semi").localCheckpoint(false))
+    val probe = keyed.withColumnRenamed("a", "m")
+    semiNaive(init, pair) { (frontier, _) =>
+      frontier.withColumnRenamed("b", "m").join(probe, group :+ "m")
+        .select(pair.map(col): _*)
+    }
+  }
+
   /** Materialize AND cut attribute lineage. localCheckpoint keeps the plan's
     * expression ids, so two checkpointed frames sharing an upstream scan put
     * duplicate attribute ids into sibling Union children — Catalyst's Union

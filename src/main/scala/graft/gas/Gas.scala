@@ -45,26 +45,11 @@ object Gas {
     val spark = edges.sparkSession
     val adj = undirected(edges)
     import spark.implicits._
-    var visited = Seq((source, 0)).toDF("vertex", "level").localCheckpoint()
-    var frontier = visited
-    var level = 0
-    var n = 1L
-    while (n > 0 && level < maxIter) {
-      level += 1
-      // LAZY checkpoint + count: the count() job itself materializes the
-      // checkpoint blocks — one job per round instead of an eager-checkpoint
-      // job followed by a count job (guide §1.2: remove passes; measured ~2
-      // jobs/round → 1 on a 40-job BFS)
-      val next = frontier.join(adj, col("vertex") === col("src"))
-        .select(col("dst").as("vertex")).dropDuplicates("vertex")
-        .join(visited, Seq("vertex"), "left_anti")
-        .withColumn("level", lit(level)).localCheckpoint(false)
-      n = next.count()
-      // frontiers are checkpointed; the visited accumulator is a shallow union tree
-      // over materialized nodes — no checkpoint needed per round
-      if (n > 0) { visited = visited.unionByName(graft.engine.DfOps.reid(next)); frontier = next }
+    graft.engine.DfOps.semiNaive(Seq((source, 0)).toDF("vertex", "level"),
+      Seq("vertex"), maxIter) { (frontier, level) =>
+      frontier.join(adj, col("vertex") === col("src"))
+        .select(col("dst").as("vertex"), lit(level).as("level"))
     }
-    visited
   }
 
   /** Single-source shortest paths (weighted, Bellman-Ford style frontier relaxation). */
@@ -98,7 +83,7 @@ object Gas {
       val cand = frontier.join(adj, col("vertex") === col("src"))
         .select(col("seed"), col("dst").as("vertex"), (col("dist") + col("weight")).as("nd"))
         .groupBy("seed", "vertex").agg(min("nd").as("nd"))
-      // lazy checkpoint + count fusion (see bfs): one job per round
+      // lazy checkpoint + count fusion (see DfOps.semiNaive): one job per round
       val improved = cand.join(dist, Seq("seed", "vertex"), "left_outer")
         .filter(col("dist").isNull || col("nd") < col("dist"))
         .select(col("seed"), col("vertex"), col("nd").as("dist")).localCheckpoint(false)
@@ -275,7 +260,7 @@ object Gas {
         .select(col("dst").as("vertex")).dropDuplicates("vertex")
         .join(out, Seq("vertex"), "left_anti")
         .withColumn("depth", lit(depth)).localCheckpoint(false)
-      val c = next.count() // fused materialize+count (see bfs)
+      val c = next.count() // fused materialize+count (see DfOps.semiNaive)
       if (c == 0) frontier = null
       else {
         val room = n - total

@@ -950,35 +950,17 @@ object Rdfs {
         val (xSrc, reach) = driverBfs.getOrElse {
           val eAll = ckpt(eNew.unionByName(remPairs)
             .dropDuplicates("p_id", "a", "b"))
-          var backAcc = dTails.select(col("p_id"), col("b").as("n")).distinct()
-          var backFrontier = backAcc
-          var nb = backFrontier.count()
-          while (nb > 0) {
-            backFrontier = ckpt(eAll
-              .join(backFrontier.select(col("p_id"), col("n").as("b")),
+          val xS = graft.engine.DfOps.semiNaive(
+            dTails.select(col("p_id"), col("b").as("n")), Seq("p_id", "n")) {
+            (frontier, _) => eAll
+              .join(frontier.select(col("p_id"), col("n").as("b")),
                 Seq("p_id", "b"), "left_semi")
-              .select(col("p_id"), col("a").as("n")).distinct()
-              .join(backAcc, Seq("p_id", "n"), "left_anti"))
-            nb = backFrontier.count()
-            if (nb > 0) backAcc = backAcc.unionByName(
-              graft.engine.DfOps.reid(backFrontier))
+              .select(col("p_id"), col("a").as("n"))
           }
-          val xS = ckpt(backAcc.dropDuplicates("p_id", "n"))
           // forward BFS: exact new reach of every affected source
-          var rch = ckpt(eNew
-            .join(xS.select(col("p_id"), col("n").as("a")),
-              Seq("p_id", "a"), "left_semi")
-            .select(col("p_id"), col("a").as("x"), col("b").as("y")))
-          var frontier = rch
-          var nf = frontier.count()
-          while (nf > 0) {
-            frontier = ckpt(frontier.select(col("p_id"), col("x"), col("y").as("a"))
-              .join(eNew, Seq("p_id", "a"))
-              .select(col("p_id"), col("x"), col("b").as("y")).distinct()
-              .join(rch, Seq("p_id", "x", "y"), "left_anti"))
-            nf = frontier.count()
-            if (nf > 0) rch = rch.unionByName(graft.engine.DfOps.reid(frontier))
-          }
+          val rch = graft.engine.DfOps.closurePairs(eNew, Seq("p_id"),
+            Some(xS.withColumnRenamed("n", "a")))
+            .select(col("p_id"), col("a").as("x"), col("b").as("y"))
           (xS, rch)
         }
         // id → term dictionary from the effective partitions (old view:
@@ -1951,21 +1933,9 @@ object Rdfs {
         .withColumn("nid", col("n")("id")).dropDuplicates("nid").localCheckpoint()
       val pDict = pairsDf(spark, transProps.map(r => (r, r)).toSeq, "pt", "pt2")
         .select(col("pt")("id").as("p_id"), col("pt").as("pterm")).dropDuplicates("p_id")
-      val edges0 = tEdges
-        .select(col("p_id"), col("s")("id").as("a"), col("o")("id").as("b"))
-        .dropDuplicates("p_id", "a", "b").localCheckpoint()
-      var acc = edges0
-      var frontier = edges0
-      var n = frontier.count()
-      while (n > 0) {
-        val stepped = frontier.select(col("p_id"), col("a"), col("b").as("m"))
-          .join(edges0.select(col("p_id"), col("a").as("m"), col("b")), Seq("p_id", "m"))
-          .select("p_id", "a", "b").dropDuplicates("p_id", "a", "b")
-        frontier = stepped.join(acc, Seq("p_id", "a", "b"), "left_anti").localCheckpoint()
-        n = frontier.count()
-        if (n > 0) acc = acc.unionByName(graft.engine.DfOps.reid(frontier))
-      }
-      val dTrans = acc
+      val dTrans = graft.engine.DfOps.closurePairs(
+          tEdges.select(col("p_id"), col("s")("id").as("a"), col("o")("id").as("b")),
+          Seq("p_id"))
         .join(dict.select(col("nid").as("a"), col("n").as("s")), Seq("a"))
         .join(dict.select(col("nid").as("b"), col("n").as("o")), Seq("b"))
         .join(broadcast(pDict), Seq("p_id"))

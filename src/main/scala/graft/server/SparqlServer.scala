@@ -51,6 +51,14 @@ final class SparqlServer(@volatile private var store: GraftStore, port: Int = 0)
     ex.close()
   }
 
+  /** A request text that does not parse (the SPARQL parser, which also reads
+    * Turtle GSP payloads) is the client's fault: 400. Any other failure is the
+    * server's: 500.
+    */
+  private def fail(ex: HttpExchange, what: String, e: Exception): Unit =
+    respond(ex, e match { case _: graft.sparql.Parser.ParseError => 400; case _ => 500 },
+      "text/plain", s"$what error: ${e.getMessage}")
+
   private def handleQuery(ex: HttpExchange, st: GraftStore): Unit = try {
     // one FAIR pool per serving thread: under spark.scheduler.mode=FAIR,
     // concurrent clients round-robin task slots instead of queueing behind
@@ -89,7 +97,7 @@ final class SparqlServer(@volatile private var store: GraftStore, port: Int = 0)
       else ("application/sparql-results+json", SparqlResults.toJson(df))
     respond(ex, 200, ct, body)
   } catch {
-    case e: Exception => respond(ex, 400, "text/plain", s"query error: ${e.getMessage}")
+    case e: Exception => fail(ex, "query", e)
   }
 
   private def handleUpdate(ex: HttpExchange, get: () => GraftStore,
@@ -100,7 +108,7 @@ final class SparqlServer(@volatile private var store: GraftStore, port: Int = 0)
     set(Update(get(), u))
     respond(ex, 200, "text/plain", "OK")
   } catch {
-    case e: Exception => respond(ex, 400, "text/plain", s"update error: ${e.getMessage}")
+    case e: Exception => fail(ex, "update", e)
   }
 
   server.createContext("/sparql", new HttpHandler {
@@ -213,7 +221,7 @@ final class SparqlServer(@volatile private var store: GraftStore, port: Int = 0)
           }
       }
     } catch {
-      case e: Exception => respond(ex, 400, "text/plain", s"gsp error: ${e.getMessage}")
+      case e: Exception => fail(ex, "gsp", e)
     }
   })
 

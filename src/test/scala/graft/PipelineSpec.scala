@@ -329,6 +329,68 @@ class PipelineSpec extends GraftSuite {
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 
+  // driver-side reference: every (a, b) joined by a path of length >= 1
+  private def refClosure(es: Seq[(Long, Long)], from: Set[Long] => Set[Long] = identity)
+      : Set[(Long, Long)] = {
+    val out = es.groupBy(_._1).map { case (a, xs) => a -> xs.map(_._2).toSet }
+    from(es.map(_._1).toSet).flatMap { s =>
+      var seen = Set.empty[Long]
+      var fr = out.getOrElse(s, Set.empty[Long])
+      while (fr.nonEmpty) { seen ++= fr; fr = fr.flatMap(out.getOrElse(_, Set.empty[Long])) -- seen }
+      seen.map(s -> _)
+    }
+  }
+
+  test("semiNaive/closurePairs match a driver-side closure on a cyclic graph") {
+    import graft.engine.DfOps
+    val g1 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 6L), (5L, 5L), (7L, 8L), (1L, 2L))
+    val g2 = Seq((1L, 3L), (3L, 2L), (2L, 1L), (6L, 7L))
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // ungrouped, unseeded: distinct pairs, no duplicates in the union
+    val all = pairs(DfOps.closurePairs(g1.toDF("a", "b")))
+    assert(all.size == all.distinct.size && all.toSet == refClosure(g1))
+    // ungrouped, seeded
+    val seeded = pairs(DfOps.closurePairs(g1.toDF("a", "b"), seeds = Some(Seq(4L, 7L).toDF("a"))))
+    assert(seeded.size == seeded.distinct.size && seeded.toSet == refClosure(g1, _ => Set(4L, 7L)))
+    // p_id-grouped: a path never crosses groups
+    val grouped = (g1.map(e => (10L, e._1, e._2)) ++ g2.map(e => (20L, e._1, e._2)))
+      .toDF("p_id", "a", "b")
+    def byGroup(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+      df.select("p_id", "a", "b").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def ref(p: Long, es: Seq[(Long, Long)], f: Set[Long] => Set[Long] = identity) =
+      refClosure(es, f).map { case (a, b) => (p, a, b) }
+    assert(byGroup(DfOps.closurePairs(grouped, Seq("p_id"))) == ref(10L, g1) ++ ref(20L, g2))
+    val gSeeds = Seq((10L, 4L), (20L, 6L), (20L, 1L)).toDF("p_id", "a")
+    assert(byGroup(DfOps.closurePairs(grouped, Seq("p_id"), Some(gSeeds))) ==
+      ref(10L, g1, _ => Set(4L)) ++ ref(20L, g2, _ => Set(6L, 1L)))
+  }
+
+  test("semiNaive stops at maxRounds and runs one job per round") {
+    import graft.engine.DfOps
+    // AQE submits every exchange as a job of its own and each broadcast is a
+    // collect job: off on this private session, a job is one action, the count
+    // that materializes a round's lazy checkpoint
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s2.implicits._
+    val k = 8
+    val chain = (0L until k.toLong).map(i => (i, i + 1)).toDF("src", "dst").localCheckpoint()
+    def reach(maxRounds: Int) = DfOps.semiNaive(Seq((0L, 0)).toDF("v", "round"), Seq("v"),
+      maxRounds) { (frontier, r) =>
+      frontier.join(chain, col("v") === col("src")).select(col("dst").as("v"), lit(r).as("round"))
+    }
+    def levels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(levels(reach(3)) == (0 to 3).map(i => i.toLong -> i).toMap)
+    // rounds 1..k reach the chain's end and round k+1 finds nothing: k + 1
+    // rounds, plus the caller's collect
+    val (lv, m) = graft.tools.JobMeter.measure(s2)(levels(reach(Int.MaxValue)))
+    assert(lv == (0 to k).map(i => i.toLong -> i).toMap)
+    assert(m.jobs.sum() <= (k + 1) + 1, s"${m.jobs.sum()} jobs for ${k + 1} rounds")
+  }
+
   test("connectedComponents converges on a long chain via pointer-jumping") {
     // 60-vertex chain: pure propagation needs 59 rounds; with jumps from round 3
     // the label-shortcut length doubles per round, so 14 rounds must suffice

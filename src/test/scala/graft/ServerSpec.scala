@@ -3,6 +3,7 @@ package graft
 import graft.server.SparqlServer
 import graft.sources.Rio
 import graft.engine.Engine
+import graft.model.GraftStore
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URLEncoder
@@ -50,6 +51,22 @@ class ServerSpec extends GraftSuite {
       // errors: missing param, parse error
       assert(get(s"$base/sparql").statusCode() == 400)
       assert(get(s"$base/sparql?query=${enc("SELECT ?x WHERE {")}").statusCode() == 400)
+      assert(post(s"$base/sparql/update", s"update=${enc("INSERT DATA { <urn:x> ")}")
+        .statusCode() == 400)
+    } finally srv.stop()
+  }
+
+  test("a failure that is not the client's is a 500") {
+    // an at-rest store whose parquet files vanish after it was opened
+    val dir = java.nio.file.Files.createTempDirectory("graft-srv-gone").toString
+    GraftStore.save(store.statements.filter(
+      org.apache.spark.sql.functions.col("p_id") === engine.TermIds.iriId("urn:p:r_name")), dir)
+    val srv = new SparqlServer(GraftStore.load(spark, dir)).start()
+    try {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      val r = get(s"http://127.0.0.1:${srv.boundPort}/sparql?query=" +
+        enc("SELECT ?n WHERE { ?r <urn:p:r_name> ?n }"))
+      assert(r.statusCode() == 500, r.body())
     } finally srv.stop()
   }
 
@@ -185,8 +202,9 @@ class ServerSpec extends GraftSuite {
       assert(get(g).body().trim.isEmpty)
       assert(get(s"$base/sparql?query=${enc("ASK { ?s <urn:p:r_name> ?o }")}")
         .body().contains("true"))
-      // missing graph designator is a clean 400
+      // missing graph designator and a payload the Turtle reader rejects are 400s
       assert(get(s"$base/sparql/gsp").statusCode() == 400)
+      assert(send("POST", g, "<urn:gsp:d> <urn:p:v> ", "text/turtle").statusCode() == 400)
     } finally srv.stop()
   }
 }
