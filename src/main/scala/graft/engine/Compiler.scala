@@ -193,15 +193,6 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     }
   }
 
-  /** geo:search magic-predicate group → solution DataFrame (the
-    * GeoSpatialServiceFactory analog, vocabulary GeoSpatial.java:64-84): the group's
-    * subject var binds to subjects whose geo:predicate object is a packed
-    * "lat#lon(#time)" literal inside the requested circle/rectangle (and time range).
-    * The reference range-scans a z-order B+Tree with a BigMin advancer; here the scan
-    * is a p_id-pruned statement scan + two sargable range predicates (+ exact
-    * haversine for circles) — the columnar replacement for the index trick, with
-    * Geo.zorder available as a clustering key at scale.
-    */
   /** INPUT parameters of a geo:search group (GeoSpatial.java magic predicates);
     * vars in their object position make the service correlated. Output-binding
     * predicates (locationValue, latValue, …) are excluded.
@@ -212,6 +203,15 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     "spatialUnit", "timeStart", "timeEnd",
     "customFields", "customFieldsLowerBounds", "customFieldsUpperBounds")
 
+  /** geo:search magic-predicate group → solution DataFrame (the
+    * GeoSpatialServiceFactory analog, vocabulary GeoSpatial.java:64-84): the group's
+    * subject var binds to subjects whose geo:predicate object is a packed
+    * "lat#lon(#time)" literal inside the requested circle/rectangle (and time range).
+    * The reference range-scans a z-order B+Tree with a BigMin advancer; here the scan
+    * is a p_id-pruned statement scan + two sargable range predicates (+ exact
+    * haversine for circles) — the columnar replacement for the index trick, with
+    * Geo.zorder available as a clustering key at scale.
+    */
   private[engine] def geoScan(subjVar: String, ts: Seq[Triple],
                               frame: Option[DataFrame] = None): DataFrame = {
     def constStr(p: String): Option[String] = ts.collectFirst {
@@ -1197,7 +1197,6 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     }
   }
 
-  /** Pick equi- vs compatibility-join based on static unbound analysis. */
   /** Push an initial-bindings VALUES block beneath left-joins/filters so OPTIONAL
     * sees the pre-bound vars (the reference's BINDINGS evaluation order).
     */
@@ -1238,6 +1237,7 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     joinOp(l, svc, dl, dr, "inner")
   }
 
+  /** Pick equi- vs compatibility-join based on static unbound analysis. */
   private def joinOp(lOp: Op, rOp: Op, dl: DataFrame, dr: DataFrame, how: String): DataFrame = {
     val shared = dl.columns.intersect(dr.columns).toSet
     val risky = (unboundOf(lOp) ++ unboundOf(rOp)) & shared
@@ -1855,10 +1855,6 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     acc.dropDuplicates("s", "p", "o")
   }
 
-  /** Extract `hint:Query hint:describeMode "<mode>"` from the WHERE group
-    * (ASTDescribeOptimizer reads QueryHints.DESCRIBE_MODE; modes:
-    * DescribeModeEnum.{ForwardOneStep,SymmetricOneStep,CBD,SCBD}).
-    */
   /** Extract the literal object of `hint:Query hint:<local> "<value>"` from the
     * WHERE group (ASTQueryHintOptimizer scope-Query hints).
     */
@@ -1871,6 +1867,10 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     where.toSeq.flatMap(scan).headOption
   }
 
+  /** Extract `hint:Query hint:describeMode "<mode>"` from the WHERE group
+    * (ASTDescribeOptimizer reads QueryHints.DESCRIBE_MODE; modes:
+    * DescribeModeEnum.{ForwardOneStep,SymmetricOneStep,CBD,SCBD}).
+    */
   private def describeModeHint(where: Option[GP]): Option[String] = {
     val found = queryHintLit(where, "describeMode").toSeq
     found.foreach { m =>

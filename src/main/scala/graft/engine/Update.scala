@@ -373,13 +373,6 @@ object Update {
 
   private val bnodeScope = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Ground quads → statements DataFrame. Blank nodes (labeled or generated by
-    * `[…]`/`(…)` syntax) arrive as the parser's VarNode placeholders and become
-    * bnode terms scoped to THIS update execution (SPARQL: bnode labels are scoped
-    * per request — re-running the same INSERT DATA creates fresh bnodes). Labeled
-    * and generated bnodes live in disjoint namespaces so `_:bn1` never collides
-    * with a `[…]`-generated node.
-    */
   /** Empty (s,p,o,g) frame as a FRESH LocalRelation — `statements.limit(0)`
     * would share the store scan's attribute ids and poison downstream unions
     * (Catalyst Union constraint rewrite; see DfOps.freshLeaf). */
@@ -390,6 +383,13 @@ object Update {
         Seq("s", "p", "o", "g").map(n =>
           org.apache.spark.sql.types.StructField(n, Term.schema))))
 
+  /** Ground quads → statements DataFrame. Blank nodes (labeled or generated by
+    * `[…]`/`(…)` syntax) arrive as the parser's VarNode placeholders and become
+    * bnode terms scoped to THIS update execution (SPARQL: bnode labels are scoped
+    * per request — re-running the same INSERT DATA creates fresh bnodes). Labeled
+    * and generated bnodes live in disjoint namespaces so `_:bn1` never collides
+    * with a `[…]`-generated node.
+    */
   private def constQuads(store: GraftStore, quads: Seq[QuadData]): DataFrame = {
     val scope = bnodeScope.incrementAndGet()
     def term(n: Node): Column = n match {

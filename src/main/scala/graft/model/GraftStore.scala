@@ -152,16 +152,6 @@ final class GraftStore(val spark: SparkSession, val statements: DataFrame,
   /** Named-graph view (g bound). */
   def namedGraphs: DataFrame = statements.filter(col("g").isNotNull)
 
-  /** Current statements whose subject id ∈ `sids`, served from the s-keyed
-    * sidecar (SubjectIndex) when one is at rest for this store — the SPO
-    * access-path analog (`rdf/spo/SPOKeyOrder.java:112-127`): bucket dirs
-    * prune the scan to the seeds' `s_b` values, the pushed In filter on
-    * `s.id` prunes row groups inside them. Layered exactly like the
-    * statements view itself: at-rest base (minus partitions the in-session
-    * layout replaced) + durable-commit delta fold + in-session segments.
-    * None ⇒ no sidecar (not at-rest, or stale) — caller scans the
-    * predicate-partitioned layout as before.
-    */
   /** Is an s-keyed sidecar at rest (and current) for this store? Cheap probe
     * for the compiler's seeded route — checked BEFORE paying a driver collect
     * of the seed ids.
@@ -201,6 +191,16 @@ final class GraftStore(val spark: SparkSession, val statements: DataFrame,
     if (atRestPath.isEmpty || layout.segPids.contains(pid)) None
     else Some(partitionDiskBytes.getOrElse(pid, 0L))
 
+  /** Current statements whose subject id ∈ `sids`, served from the s-keyed
+    * sidecar (SubjectIndex) when one is at rest for this store — the SPO
+    * access-path analog (`rdf/spo/SPOKeyOrder.java:112-127`): bucket dirs
+    * prune the scan to the seeds' `s_b` values, the pushed In filter on
+    * `s.id` prunes row groups inside them. Layered exactly like the
+    * statements view itself: at-rest base (minus partitions the in-session
+    * layout replaced) + durable-commit delta fold + in-session segments.
+    * None ⇒ no sidecar (not at-rest, or stale) — caller scans the
+    * predicate-partitioned layout as before.
+    */
   private[graft] def subjectSlice(sids: Seq[Long]): Option[DataFrame] =
     atRestPath.flatMap { path =>
       SubjectIndex.forPath(spark, path).map { h =>
@@ -503,20 +503,6 @@ object GraftStore {
   def assemble(df: DataFrame): DataFrame =
     df.select(col("p")("id").as("p_id"), col("s"), col("p"), col("o"), col("g"), col("stype"))
 
-  /** Persist as predicate-partitioned parquet — the scalable at-rest layout.
-    * Concurrent output writers sidestep the dynamic-partition writer's per-task
-    * sort of the (wide) statement rows: predicate counts are vocabulary-sized, so
-    * a writer per open partition is cheap and the sort is pure overhead.
-    *
-    * Rows are clustered on (p_id, subject-hash bucket) before the write so each
-    * predicate directory holds full files instead of one sliver per input task
-    * (writers × predicates files otherwise — footer reads then tax every later
-    * scan). The bucket count scales with the predicate's row count (one writer
-    * per ~250k rows, capped) so big predicates keep file/task parallelism for
-    * later scans while vocabulary-tail predicates get a single file each. The
-    * per-predicate histogram is vocabulary-sized: a map-side-combined count
-    * aggregate, broadcast back onto the rows.
-    */
   /** Delete the derived-index dirs tied to statements path `path` (lexicon,
     * its delta side dir, persisted text postings, subject index) and roll the
     * in-session caches. A full statements rewrite invalidates them all; any
@@ -535,6 +521,20 @@ object GraftStore {
     SubjectIndex.invalidate(path)
   }
 
+  /** Persist as predicate-partitioned parquet — the scalable at-rest layout.
+    * Concurrent output writers sidestep the dynamic-partition writer's per-task
+    * sort of the (wide) statement rows: predicate counts are vocabulary-sized, so
+    * a writer per open partition is cheap and the sort is pure overhead.
+    *
+    * Rows are clustered on (p_id, subject-hash bucket) before the write so each
+    * predicate directory holds full files instead of one sliver per input task
+    * (writers × predicates files otherwise — footer reads then tax every later
+    * scan). The bucket count scales with the predicate's row count (one writer
+    * per ~250k rows, capped) so big predicates keep file/task parallelism for
+    * later scans while vocabulary-tail predicates get a single file each. The
+    * per-predicate histogram is vocabulary-sized: a map-side-combined count
+    * aggregate, broadcast back onto the rows.
+    */
   def save(df: DataFrame, path: String): Unit = {
     // rebuilding the statements at `path` orphans whatever derived indexes
     // were persisted next to it — drop them up front (no-op on fresh paths,

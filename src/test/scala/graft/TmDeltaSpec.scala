@@ -1007,6 +1007,44 @@ abstract class TmDeltaScenarios(part: Int, of: Int) extends AnyFunSuite {
         |INSERT { GRAPH <urn:sy:g> { <urn:sy:p3> <urn:sy:parentOf> <urn:sy:k3> . } }
         |WHERE {}""".stripMargin)
   }
+
+  // facts whose subject AND object are sameAs class members ({q,r} likes
+  // {m,n,o2}): the object arm and the both-sided orbit of every substitution
+  // site (appended last so the earlier scenarios keep their slice)
+  scenario("sameAs: fact delete between two classes retracts its orbit copies (delta)") {
+    val st = atRest(saBase, "sa13")
+    check(st, "DELETE DATA { GRAPH <urn:x:g> { <urn:x:q> <urn:x:likes> <urn:x:m> . } }")
+  }
+
+  scenario("sameAs: orbit copies stay derivable from an explicit alias fact (delta)") {
+    val t = saBase + """
+      @prefix : <urn:x:> .
+      :g5 { :q :likes :n . }
+    """
+    val st = atRest(t, "sa14")
+    check(st, "DELETE DATA { GRAPH <urn:x:g> { <urn:x:q> <urn:x:likes> <urn:x:m> . } }")
+  }
+
+  // a fact whose subject has no aliases and whose object is in a class the
+  // delta splits or merges: only the class diff's object arm reaches it
+  val saObjBase = saBase + """
+    @prefix : <urn:x:> .
+    :g6 { :p :likes :o2 . }
+  """
+
+  scenario("sameAs: edge delete splits the class under an unaliased subject's fact (delta)") {
+    val st = atRest(saObjBase, "sa15")
+    check(st,
+      s"DELETE DATA { GRAPH <urn:x:g> { <urn:x:n> <${OWL}sameAs> <urn:x:o2> . } }")
+  }
+
+  scenario("sameAs: edge insert merges classes under an unaliased subject's fact (delta)") {
+    val st = atRest(saObjBase, "sa16")
+    check(st,
+      s"""DELETE { <urn:x:none> <urn:x:never> <urn:x:nope> . }
+         |INSERT { <urn:x:o2> <${OWL}sameAs> <urn:x:q> . }
+         |WHERE {}""".stripMargin)
+  }
 }
 
 /** The 6 concurrent slices of the TM scenario corpus (see TmDeltaScenarios). */
