@@ -4,7 +4,7 @@ import graft.model.{GraftStore, Term}
 import graft.sparql.{Algebra, Ast, Parser}
 import graft.sparql.Algebra._
 import graft.sparql.Ast._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -563,23 +563,19 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     case _ => false
   }
 
-  /** Seed cap for the subject access path: above this the probe degrades into
-    * a broad In filter with no row-group locality — the plain scan join wins.
-    */
-  private val SEED_CAP = 1024
-
   /** Evaluate a bound-subject/unbound-predicate triple through the subject
     * sidecar, seeded by the accumulated solutions' distinct subject ids (one
-    * driver-side collect, capped — the reference's chunked index-nested-loop
+    * bounded driver-side collect — the reference's chunked index-nested-loop
     * does the same binding propagation). None ⇒ shape doesn't pay (no sidecar,
-    * too many seeds) and the caller falls back to the scan join.
+    * more than `DfOps.SEED_CAP` seeds, where the probe degrades into a broad In
+    * filter with no row-group locality) and the caller falls back to the scan join.
     */
   private def seededSubjectScan(df: DataFrame, t: Triple, sv: String): Option[DataFrame] = {
     if (!store.hasSubjectIndex) return None
-    val rows = df.select(col(sv)("id").as("__seed"))
+    val rows = DfOps.collectAtMost(df.select(col(sv)("id").as("__seed"))
       .filter(col("__seed").isNotNull)
-      .dropDuplicates("__seed").limit(SEED_CAP + 1).collect()
-    if (rows.length > SEED_CAP) return None
+      .dropDuplicates("__seed"), DfOps.SEED_CAP + 1)
+    if (rows.length > DfOps.SEED_CAP) return None
     val sids = rows.map(_.getLong(0)).toSeq
     if (sids.isEmpty)
       // no live seeds: the inner join is empty whatever the scan returns
@@ -898,7 +894,10 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
                                seedsInDomain: Boolean = false): DataFrame = {
     val raw = pathPairIds(inner, g)
     val oriented = if (fromSubject) raw else raw.select(col("b").as("a"), col("a").as("b"))
-    val seeds = seeds0.select(col("seed").as("a")).dropDuplicates("a")
+    // a driver-resident seed set stays one (closurePairs then seeds its rounds
+    // on the driver); the zero-length union below is deduplicated anyway
+    val named = seeds0.select(col("seed").as("a"))
+    val seeds = if (DfOps.isLocal(named)) named else named.dropDuplicates("a")
     val acc = DfOps.closurePairs(oriented, seeds = Some(seeds))
     val out =
       if (!includeZero) acc
@@ -953,8 +952,9 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
   private def attachTerm(d: DataFrame, idCol: String, v: String, p: Path): DataFrame =
     d.join(termDict(p).select(col("nid").as(idCol), col("n").as(v)), Seq(idCol))
 
+  /** A constant seed, driver-resident: reading it starts no job. */
   private def singleSeed(id: Long): DataFrame =
-    spark.range(1).select(lit(id).as("seed"))
+    DfOps.localFrame(spark, Seq(Row(id)), StructType(Seq(StructField("seed", LongType))))
 
   private def closureFree(p: Path): Boolean = p match {
     case PZeroOrMore(_) | POneOrMore(_) | PZeroOrOne(_) | PZero(_) => false
@@ -1814,8 +1814,9 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
     *    bnode SUBJECTS (DescribeModeEnum.java:127 SCBD semantics).
     *
     * The bnode chase is a `DfOps.semiNaive` fixpoint over node ids: each round is
-    * one semi-join of the (small) bnode frontier against the statement table, and
-    * the answer is one more semi-join of every reached id.
+    * one `DfOps.probe` of the statement table by the (small) bnode frontier, and
+    * the answer is one more probe by every reached id. Constant targets start it
+    * on the driver, where each probe is a pushed-down filter.
     */
   def compileDescribe(q: DescribeQuery): DataFrame = {
     val mode = describeModeHint(q.where).getOrElse("CBD")
@@ -1829,22 +1830,30 @@ final class Compiler(val store: GraftStore, ds: DatasetSpec,
         }
     val nodes = nodeDfs.reduce(_.unionByName(_)).dropDuplicates("n")
     val stmts = store.statements
+    def byId(side: String): DataFrame =
+      stmts.select(col("s"), col("p"), col("o"), col(side)("id").as("nid"))
     def forward(ids: DataFrame): DataFrame =
-      stmts.join(ids, col("s")("id") === col("nid"), "left_semi").select("s", "p", "o")
+      DfOps.probe(byId("s"), ids, Seq("nid"), "left_semi").select("s", "p", "o")
     def reverse(ids: DataFrame): DataFrame =
-      stmts.join(ids, col("o")("id") === col("nid"), "left_semi").select("s", "p", "o")
+      DfOps.probe(byId("o"), ids, Seq("nid"), "left_semi").select("s", "p", "o")
     /** Fixed point: the statements `step` reaches from `startIds` and from every
       * bnode on their `bnodeSide`, transitively (depth-bounded at 50 rounds;
       * cycles terminate regardless, a bnode is chased once).
       */
     def closure(startIds: DataFrame, step: DataFrame => DataFrame,
                 bnodeSide: String): DataFrame =
-      step(DfOps.semiNaive(startIds.localCheckpoint(false), Seq("nid"), maxRounds = 50) {
+      step(DfOps.semiNaive(
+        if (DfOps.isLocal(startIds)) startIds else startIds.localCheckpoint(false),
+        Seq("nid"), maxRounds = 50) {
         (frontier, _) => step(frontier)
           .filter(col(bnodeSide)("kind") === Term.KIND_BNODE)
           .select(col(bnodeSide)("id").as("nid"))
       })
-    val ids = nodes.select(col("n")("id").as("nid"))
+    val ids =
+      if (vars.isEmpty && consts.nonEmpty)
+        DfOps.localFrame(spark, consts.distinct.map(i => Row(TermIds.iriId(i))),
+          StructType(Seq(StructField("nid", LongType))))
+      else nodes.select(col("n")("id").as("nid"))
     val acc = mode match {
       case "ForwardOneStep" => forward(ids)
       case "SymmetricOneStep" => forward(ids).unionByName(reverse(ids))
@@ -2104,8 +2113,12 @@ object BuiltinServices {
     val stmts = c.store.statements.filter(col("p_id") === TermIds.iriId(linkType))
       .filter(col("o")("kind") =!= Term.KIND_LITERAL)
     val edges = stmts.select(col("s")("id").as("src"), col("o")("id").as("dst"))
-    val nodes = stmts.select(col("s").as("n")).unionByName(stmts.select(col("o").as("n")))
-      .withColumn("nid", col("n")("id")).dropDuplicates("nid").localCheckpoint()
+    // terms for the result ids: the store's lexicon when it has one (as
+    // termDict); a mutated store's link partition otherwise
+    val nodes =
+      if (c.store.lexiconPath.isDefined) c.store.nodeTerms.select("nid", "n")
+      else stmts.select(col("s").as("n")).unionByName(stmts.select(col("o").as("n")))
+        .withColumn("nid", col("n")("id")).dropDuplicates("nid").localCheckpoint()
     def seedId: Long = constIri("in").map(TermIds.iriId).getOrElse(
       throw new IllegalArgumentException(s"gas:program $program needs gas:in seed"))
 

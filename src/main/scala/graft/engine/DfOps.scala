@@ -1,7 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{array, col, element_at, explode, typedLit}
+import org.apache.spark.sql.types.{LongType, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 object DfOps {
   /** Re-alias every column (fresh expression ids). Self-unions in fixpoint loops can
@@ -11,26 +16,101 @@ object DfOps {
   def reid(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
 
+  /** The one cap on rows held on the driver: a fixpoint round's frontier in
+    * `semiNaive`'s driver rounds, and the seed ids of the subject sidecar probe.
+    */
+  val SEED_CAP = 1024
+
+  /** True when `df` is driver-resident: its optimized plan is one LocalRelation
+    * (a projection or filter of one folds into it), so collecting it starts no job.
+    */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** At most `n` rows of `df` in one job: every partition stops after `n` rows.
+    * A driver-resident `df` is read without a job. `limit(n).collect()` instead
+    * may run several incremental jobs, each scanning more partitions, so how much
+    * it reads depends on task scheduling.
+    */
+  def collectAtMost(df: DataFrame, n: Int): Array[Row] =
+    if (isLocal(df)) df.collect().take(n)
+    else {
+      // on df's own plan: planned once, its rows copied out of the reused buffer
+      val toRow = ExpressionEncoder(RowEncoder.encoderFor(df.schema)).resolveAndBind()
+        .createDeserializer()
+      df.queryExecution.toRdd.mapPartitions(_.take(n).map(_.copy())).collect()
+        .take(n).map(toRow)
+    }
+
+  /** A driver-resident frame (one LocalRelation) of `rows` on `spark`, with
+    * `schema`'s columns made nullable.
+    */
+  def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(schema.map(_.copy(nullable = true))))
+
   /** Semi-naive fixpoint, the one iteration driver of property paths, DESCRIBE's
     * bnode chase, the transitive-property closure, truth maintenance's cone BFS
     * and GAS BFS. Round 0's frontier is `init`; round r's is `step(frontier, r)`,
     * deduplicated on `keys`, minus every row reached so far (anti-join on `keys`).
-    * Stops when a round adds nothing or after `maxRounds` rounds, and returns the
-    * reached rows as a `reid` union over the frontiers.
+    * Stops when a round adds nothing or after `maxRounds` rounds.
     *
-    * Each frontier is a LAZY localCheckpoint that its own count() materializes:
-    * one action per round, not an eager checkpoint job plus a count job. `init`
-    * is neither counted (an empty one ends the loop after round 1) nor
-    * checkpointed, and every round's anti-join reads it: pass it distinct on
-    * `keys` and checkpointed (a lazy checkpoint is enough, round 1's count
-    * materializes it) unless it is cheap to rebuild.
+    * Driver rounds. A driver-resident `init` (`isLocal`) starts on the driver:
+    * the frontier is a LocalRelation of at most `SEED_CAP` rows, the reached keys
+    * a driver hash set. A round collects its step output in one job with a
+    * per-partition cap (`collectAtMost`), then deduplicates and anti-joins it on
+    * the driver; a probe of the edge side through `probe` is then a pushed-down
+    * filter with no exchange or broadcast. The reached rows come back as one
+    * LocalRelation on `init`'s session (`localFrame`).
+    *
+    * Distributed rounds. Any other `init`, and the round whose step output
+    * exceeds `SEED_CAP` rows (or whose columns differ from `init`'s in type), run
+    * distributed from then on: each frontier is a LAZY localCheckpoint that its
+    * own count() materializes, and the result is a `reid` union over the
+    * frontiers. That count is one action, but under AQE every exchange and
+    * broadcast of the round's plan is a job of its own: 5–6 jobs for a round over
+    * a tiny frontier. A distributed `init` is neither counted (an empty one ends
+    * the loop after round 1) nor checkpointed, and every round's anti-join reads
+    * it: pass it distinct on `keys` and checkpointed (a lazy checkpoint is
+    * enough, round 1's count materializes it) unless it is cheap to rebuild.
     */
   def semiNaive(init: DataFrame, keys: Seq[String], maxRounds: Int = Int.MaxValue)
                (step: (DataFrame, Int) => DataFrame): DataFrame = {
-    var acc = init
-    var frontier = init
-    var n = 1L
+    if (!isLocal(init)) return distributedRounds(init, init, keys, 0, maxRounds, step)
+    val spark = init.sparkSession
+    val schema = init.schema
+    val names = schema.fieldNames.toSeq
+    val types = schema.map(f => f.name -> f.dataType).toMap
+    val keyAt = keys.map(names.indexOf(_))
+    val reached = mutable.ArrayBuffer.from(init.collect())
+    val seen = mutable.HashSet.from(reached.map(r => keyAt.map(r.get)))
+    var frontier = reached.toSeq
     var round = 0
+    while (frontier.nonEmpty && round < maxRounds) {
+      val prev = localFrame(spark, frontier, schema)
+      val out = step(prev, round + 1)
+      val fits = out.schema.size == names.size &&
+        out.schema.forall(f => types.get(f.name).contains(f.dataType))
+      val got = if (fits) collectAtMost(out, SEED_CAP + 1) else Array.empty[Row]
+      if (!fits || got.length > SEED_CAP)
+        return distributedRounds(localFrame(spark, reached.toSeq, schema), prev, keys,
+          round, maxRounds, step)
+      round += 1
+      val at = names.map(out.schema.fieldIndex)
+      frontier = got.iterator.map(r => Row.fromSeq(at.map(r.get)))
+        .filter(r => seen.add(keyAt.map(r.get))).toVector
+      reached ++= frontier
+    }
+    localFrame(spark, reached.toSeq, schema)
+  }
+
+  /** `semiNaive`'s distributed rounds, from round `round0 + 1` on. */
+  private def distributedRounds(init: DataFrame, frontier0: DataFrame, keys: Seq[String],
+                                round0: Int, maxRounds: Int,
+                                step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var acc = init
+    var frontier = frontier0
+    var n = 1L
+    var round = round0
     while (n > 0 && round < maxRounds) {
       round += 1
       frontier = step(frontier, round).dropDuplicates(keys)
@@ -41,25 +121,84 @@ object DfOps {
     acc
   }
 
+  /** A fixpoint round's probe of the edge side by key: `frontier` joined with
+    * `edges` on the columns `on` both carry. `how` is "inner" (the columns of
+    * `frontier.join(edges, on)`) or "left_semi" (the `edges` rows with a match).
+    *
+    * A driver-resident frontier (semiNaive's driver rounds pass one) whose `on`
+    * and other columns are non-null LONG ids becomes an `isin` filter per key on
+    * `edges`, which parquet pushes down, and an inner probe reads the frontier's
+    * other columns from a literal map by key: no exchange and no broadcast job.
+    * Any other frontier runs the join against `joinEdges`, which is only built
+    * then (a caller's keyed copy of `edges`, say).
+    */
+  def probe(edges: DataFrame, frontier: DataFrame, on: Seq[String], how: String,
+            joinEdges: => DataFrame): DataFrame = {
+    val others = frontier.columns.toSeq.filterNot(on.contains)
+    val ids = if (how == "inner") on ++ others else on
+    def driverRows: Option[Seq[Row]] =
+      if ((how == "left_semi" && on.size > 1) || !isLocal(frontier) ||
+          !ids.forall(c => frontier.schema(c).dataType == LongType)) None
+      else Some(frontier.collect().toSeq)
+        .filter(_.forall(r => ids.forall(c => !r.isNullAt(r.fieldIndex(c)))))
+    driverRows match {
+      case None if how == "left_semi" =>
+        joinEdges.join(frontier.select(on.map(col): _*), on, "left_semi")
+      case None => frontier.join(joinEdges, on, how)
+      case Some(rows) =>
+        val pushed = on.foldLeft(edges) { (e, c) =>
+          e.filter(col(c).isin(rows.map(_.getAs[Long](c)).distinct: _*))
+        }
+        if (how == "left_semi") pushed
+        else {
+          val byKey = rows.groupBy(r => on.map(r.getAs[Long]))
+            .map { case (k, rs) => k -> rs.map(r => others.map(r.getAs[Long])) }
+          // a scalar key, when there is one, looks up faster than a 1-array
+          val found =
+            if (on.size == 1)
+              element_at(typedLit(byKey.map { case (k, v) => k.head -> v }), col(on.head))
+            else element_at(typedLit(byKey), array(on.map(col): _*))
+          pushed.withColumn("__found", explode(found)).select(
+            on.map(col) ++ others.indices.map(i => col("__found")(i).as(others(i))) ++
+              edges.columns.toSeq.filterNot(on.contains).map(col): _*)
+        }
+    }
+  }
+
+  /** `probe` joining against `edges` itself. */
+  def probe(edges: DataFrame, frontier: DataFrame, on: Seq[String], how: String): DataFrame =
+    probe(edges, frontier, on, how, edges)
+
   /** Transitive closure (paths of length ≥ 1) of (group…, a, b) edge pairs within
     * each group, from every source or, given `seeds` (columns group… and `a`), from
-    * the seeds only. Output: the distinct reached (group…, a, b) pairs. The edge
-    * relation is keyed on group ++ a ONCE (a subset of the dedup keys, so the
-    * distinct runs on the same exchange): every round probes it on the frontier's
-    * `b`, and an (a,b)-hashed layout would re-shuffle the whole relation per round.
+    * the seeds only. Output: the distinct reached (group…, a, b) pairs.
+    *
+    * Driver-resident `seeds` whose edges fit `SEED_CAP` start `semiNaive`'s driver
+    * rounds: round 0 is one bounded collect of their edges, and every round probes
+    * `edges` with a pushed-down filter. Otherwise, and from the first round that
+    * goes distributed, the edge relation is keyed on group ++ a ONCE (a subset of
+    * the dedup keys, so the distinct runs on the same exchange): every round probes
+    * it on the frontier's `b`, and an (a,b)-hashed layout would re-shuffle the
+    * whole relation per round. The keyed copy is built only then.
     */
   def closurePairs(edges: DataFrame, group: Seq[String] = Nil,
                    seeds: Option[DataFrame] = None): DataFrame = {
     val on = group :+ "a"
     val pair = on :+ "b"
-    val keyed = edges.select(pair.map(col): _*).repartition(on.map(col): _*)
+    val raw = edges.select(pair.map(col): _*)
+    lazy val keyed = raw.repartition(on.map(col): _*)
       .dropDuplicates(pair).sortWithinPartitions(on.map(col): _*).localCheckpoint(false)
-    val init = seeds.fold(keyed)(s =>
-      keyed.join(s.select(on.map(col): _*), on, "left_semi").localCheckpoint(false))
-    val probe = keyed.withColumnRenamed("a", "m")
+    val driverInit = seeds.filter(isLocal).flatMap { s =>
+      val rows = collectAtMost(probe(raw, s.select(on.map(col): _*), on, "left_semi"), SEED_CAP + 1)
+      if (rows.length > SEED_CAP) None
+      else Some(localFrame(raw.sparkSession, rows.distinct.toSeq, raw.schema))
+    }
+    val init = driverInit.getOrElse(seeds.fold(keyed)(s =>
+      keyed.join(s.select(on.map(col): _*), on, "left_semi").localCheckpoint(false)))
+    val rawM = raw.withColumnRenamed("a", "m")
     semiNaive(init, pair) { (frontier, _) =>
-      frontier.withColumnRenamed("b", "m").join(probe, group :+ "m")
-        .select(pair.map(col): _*)
+      probe(rawM, frontier.withColumnRenamed("b", "m"), group :+ "m", "inner",
+        keyed.withColumnRenamed("a", "m")).select(pair.map(col): _*)
     }
   }
 

@@ -40,15 +40,22 @@ object Gas {
       .sortWithinPartitions("src")
       .localCheckpoint()
 
-  /** BFS levels from a source vertex: (vertex, level). */
+  /** BFS levels from a source vertex: (vertex, level), over the edges taken in
+    * both directions. Each round probes `edges` by key from both ends
+    * (`DfOps.probe`): from a driver-resident frontier that is two pushed-down
+    * filters in one job, and no whole-graph adjacency is built.
+    */
   def bfs(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
-    val adj = undirected(edges)
     import spark.implicits._
+    val sides = Seq(
+      edges.select(col("src").as("vertex"), col("dst").as("next")),
+      edges.select(col("dst").as("vertex"), col("src").as("next")))
     graft.engine.DfOps.semiNaive(Seq((source, 0)).toDF("vertex", "level"),
       Seq("vertex"), maxIter) { (frontier, level) =>
-      frontier.join(adj, col("vertex") === col("src"))
-        .select(col("dst").as("vertex"), lit(level).as("level"))
+      val f = frontier.select("vertex")
+      sides.map(graft.engine.DfOps.probe(_, f, Seq("vertex"), "left_semi"))
+        .reduce(_.unionByName(_)).select(col("next").as("vertex"), lit(level).as("level"))
     }
   }
 
@@ -83,7 +90,8 @@ object Gas {
       val cand = frontier.join(adj, col("vertex") === col("src"))
         .select(col("seed"), col("dst").as("vertex"), (col("dist") + col("weight")).as("nd"))
         .groupBy("seed", "vertex").agg(min("nd").as("nd"))
-      // lazy checkpoint + count fusion (see DfOps.semiNaive): one job per round
+      // lazy checkpoint + count fusion (see DfOps.semiNaive's distributed
+      // rounds): one action per round, one job per exchange under AQE
       val improved = cand.join(dist, Seq("seed", "vertex"), "left_outer")
         .filter(col("dist").isNull || col("nd") < col("dist"))
         .select(col("seed"), col("vertex"), col("nd").as("dist")).localCheckpoint(false)
@@ -260,7 +268,7 @@ object Gas {
         .select(col("dst").as("vertex")).dropDuplicates("vertex")
         .join(out, Seq("vertex"), "left_anti")
         .withColumn("depth", lit(depth)).localCheckpoint(false)
-      val c = next.count() // fused materialize+count (see DfOps.semiNaive)
+      val c = next.count() // fused materialize+count: one action, a job per exchange under AQE
       if (c == 0) frontier = null
       else {
         val room = n - total

@@ -369,8 +369,8 @@ class PipelineSpec extends GraftSuite {
   test("semiNaive stops at maxRounds and runs one job per round") {
     import graft.engine.DfOps
     // AQE submits every exchange as a job of its own and each broadcast is a
-    // collect job: off on this private session, a job is one action, the count
-    // that materializes a round's lazy checkpoint
+    // collect job: off on this private session, a job is one action, the
+    // bounded collect of a driver round's step output
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -385,10 +385,71 @@ class PipelineSpec extends GraftSuite {
       df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(levels(reach(3)) == (0 to 3).map(i => i.toLong -> i).toMap)
     // rounds 1..k reach the chain's end and round k+1 finds nothing: k + 1
-    // rounds, plus the caller's collect
+    // rounds; the result is driver-resident, so the caller's collect is free
     val (lv, m) = graft.tools.JobMeter.measure(s2)(levels(reach(Int.MaxValue)))
     assert(lv == (0 to k).map(i => i.toLong -> i).toMap)
     assert(m.jobs.sum() <= (k + 1) + 1, s"${m.jobs.sum()} jobs for ${k + 1} rounds")
+  }
+
+  test("a seeded closurePairs over a k-chain runs on the driver, one job per round") {
+    import graft.engine.DfOps
+    val k = 8
+    // checkpointed, so every probe of the chain is a real job
+    val chain = (0L until k.toLong).map(i => (i, i + 1)).toDF("a", "b").localCheckpoint()
+    val seeds = Seq(0L).toDF("a")
+    val (reached, m) = graft.tools.JobMeter.measure(spark) {
+      val out = DfOps.closurePairs(chain, seeds = Some(seeds))
+      assert(DfOps.isLocal(out))
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(reached == (1L to k.toLong).map(0L -> _).toSet)
+    // round 0 (the seed's edges) and rounds 1..k: one bounded collect each, on
+    // the shared AQE session
+    assert(m.jobs.sum() <= k + 3, s"${m.jobs.sum()} jobs for a $k-chain")
+  }
+
+  test("a star above the driver cap crosses over to distributed rounds") {
+    import graft.engine.DfOps
+    // s -> hub -> (cap + 100 leaves) -> sink -> end: the hub's round overflows
+    val n = DfOps.SEED_CAP + 100
+    val leaves = (1L to n.toLong).map(_ + 10L)
+    val es = Seq((1L, 2L)) ++ leaves.map(l => (2L, l)) ++ leaves.map(l => (l, 5L)) ++
+      Seq((5L, 6L), (6L, 1L), (7L, 8L))
+    val edges = es.toDF("a", "b").localCheckpoint()
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val seeded = DfOps.closurePairs(edges, seeds = Some(Seq(1L, 7L).toDF("a")))
+    assert(!DfOps.isLocal(seeded))
+    val got = pairs(seeded)
+    assert(got.size == got.distinct.size && got.toSet == refClosure(es, _ => Set(1L, 7L)))
+    // a seed whose own edges exceed the cap starts distributed
+    val hub = pairs(DfOps.closurePairs(edges, seeds = Some(Seq(2L).toDF("a"))))
+    assert(hub.size == hub.distinct.size && hub.toSet == refClosure(es, _ => Set(2L)))
+  }
+
+  test("Gas.bfs levels match a driver-side BFS on both sides of the driver cap") {
+    import graft.engine.DfOps
+    // driver-side reference over the undirected edges
+    def refBfs(es: Seq[(Long, Long)], source: Long): Map[Long, Int] = {
+      val adj = (es ++ es.map(_.swap)).groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
+      var levels = Map(source -> 0)
+      var frontier = Seq(source)
+      var level = 0
+      while (frontier.nonEmpty) {
+        level += 1
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct.filterNot(levels.contains)
+        levels ++= frontier.map(_ -> level)
+      }
+      levels
+    }
+    val small = Seq((1L, 2L), (3L, 2L), (3L, 4L), (4L, 4L), (9L, 1L), (20L, 21L))
+    val wide = small ++ (1L to (DfOps.SEED_CAP + 50).toLong).map(i => (4L, 100L + i)) :+ ((150L, 30L))
+    for ((es, driverOnly) <- Seq(small -> true, wide -> false)) {
+      val out = Gas.bfs(es.toDF("src", "dst").localCheckpoint(), 1L)
+      assert(DfOps.isLocal(out) == driverOnly)
+      val levels = out.collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq
+      assert(levels.size == levels.toMap.size && levels.toMap == refBfs(es, 1L))
+    }
   }
 
   test("connectedComponents converges on a long chain via pointer-jumping") {
