@@ -1,7 +1,8 @@
 package graft
-/** Benchmark main: warms the store (load excluded from query timings, matching how the
-  * reference reports query latencies post-load), then times every SparkEntry query.
-  * Prints ONE JSON line for the driver.
+/** Benchmark main: opens the store (load excluded from query timings, matching how
+  * the reference reports query latencies post-load), builds the closed store, then
+  * times ONE pass over every SparkEntry query. Prints ONE JSON line on stdout.
+  * Per-entry and min-of-N readings: `graft.tools.Profile <names> <sfDir> N`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -9,14 +10,9 @@ object Bench {
     val tSess = System.nanoTime()
     val spark = LocalSpark.session()
     val sessionSec = (System.nanoTime() - tSess) / 1e9
-    // warm: build the parquet-backed statement store once (bulk-load phase).
-    // load_sec is COLD (derive+write store/lexicon/text index) only when the
-    // /tmp parquet cache for this STORE_VERSION is absent; otherwise it is a
-    // warm read-back — load_cold in the JSON says which one this run measured,
-    // so cross-round load_sec deltas aren't misread as ingest regressions.
-    // "cold" if ANY of the three at-rest artifacts (store, lexicon, text postings)
-    // is missing — a partial rebuild would otherwise be labeled warm and its
-    // load_sec misread as a read-back regression
+    // load_sec is COLD (derive+write store/lexicon/text index) only when one of the
+    // three at-rest artifacts is missing; otherwise it is a warm read-back.
+    // load_state says which one this run measured ("partial": some were missing).
     val storeBase = model.Tpch.storePath(sfDir)
     val markers = Seq(storeBase + "/_SUCCESS", storeBase + "-lexicon/_SUCCESS",
       storeBase + "-lexicon-text/postings/_SUCCESS")
@@ -27,152 +23,44 @@ object Bench {
     val t0 = System.nanoTime()
     model.Tpch.store(spark, sfDir).statements.count()
     val loadSec = (System.nanoTime() - t0) / 1e9
-    // untimed JIT/codegen warmup: run a few representative plan shapes once so the
-    // first timed queries measure the engine, not JVM compilation (latencies are
-    // reported post-warm, as the reference's published numbers are)
+    // untimed JIT and class-loading warmup on a tiny store (SparkEntry.warmup):
+    // no entry's own plan runs before it is timed, so each entry's reading
+    // includes its first-run cost over the real store
     val tWarm = System.nanoTime()
-    for (w <- Seq("q_ask", "q_join3", "q_agg_group", "p_token_count"))
-      SparkEntry.queries.get(w).foreach(fn =>
-        try fn(spark, sfDir).count() catch { case e: Throwable =>
-          // a broken warmup query means the timed run below will also report -1;
-          // surface it rather than silently reclassifying the failure as "warm"
-          System.err.println(s"[bench] warmup $w failed: ${e.getClass.getSimpleName}: ${e.getMessage}") })
-    // infrastructure families (geo/search/TM/RIO/federation/sinks): tiny-input,
-    // different-constant warms of the same plan shapes — see SparkEntry.warmup
-    SparkEntry.warmup(spark, Some(sfDir))
-    // drop the warms' discarded checkpoint blocks before anything is timed —
-    // the ContextCleaner frees them on GC once the handles go unreachable
-    System.gc()
-    Thread.sleep(500)
-    System.gc()
+    SparkEntry.warmup(spark)
     val warmupSec = (System.nanoTime() - tWarm) / 1e9
     // at-rest closed store (q_truth_maint's input): built/saved once per sf,
-    // untimed like the base store load — entailment materialization is a load
-    // phase at 100 TB, not a per-retraction cost
+    // untimed like the base store load
     val tClosed = System.nanoTime()
     try SparkEntry.closedStore(spark, sfDir).statements.count()
     catch { case e: Throwable =>
       System.err.println(s"[bench] closed-store warmup failed: ${e.getMessage}") }
     val closedSec = (System.nanoTime() - tClosed) / 1e9
-    // optional focus list for local profiling: SPARK_GRAFT_ONLY=q_a,q_b
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // between-entries GC wall accumulated across the battery: the r13→r14
-    // harness-time adjudication needs the non-query components itemized
-    // (142 × System.gc() on a large heap is a real cost, and it scales with
-    // session memory pressure — a disk/memory-noisy session shows up here)
-    var gcSec = 0.0
-    var gcRuns = 0
-    // storage-waterline GC: the per-entry System.gc() existed to let the
-    // ContextCleaner free dead localCheckpoint blocks, but a full GC on a
-    // large heap costs ~0.2 s × 142 entries (~28 s measured, the single
-    // largest harness component). Blocks only need freeing when they have
-    // actually ACCUMULATED: GC when registered storage exceeds the
-    // last-observed post-GC level by 768 MB, then re-anchor the waterline
-    // (legitimate growth — a newly opened closed store, postings — ratchets
-    // it up instead of forcing a GC per entry forever).
-    def storageUsed(): Long = spark.sparkContext.getExecutorMemoryStatus
-      .values.map { case (max, rem) => max - rem }.sum
-    val storageMax: Long = spark.sparkContext.getExecutorMemoryStatus
-      .values.map(_._1).sum
-    var waterline = storageUsed()
-    // secondary (near-capacity) GC threshold; escalates while the region is
-    // full of LIVE data so the trigger cannot degrade to a GC per entry
-    var nearCapFloor = 128L << 20
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      // SPARK_GRAFT_BENCH_ITERS=N (default 1, the driver's single-pass mode):
-      // report min-of-N per query — the noise-controlled mode for local A/Bs
-      // (battery order injects JIT/GC state into single-pass numbers; see
-      // QBENCH_AB_r9.json for the measured band)
-      val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "1").toInt
-      // min over SUCCESSFUL iterations only — a fast-failing run must not mask
-      // honest slow successes; all-fail reports the -1.0 sentinel
-      val secs = (1 to iters).flatMap { _ =>
-        val stBefore = storageUsed()
-        val t = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        val s = (System.nanoTime() - t) / 1e9
-        // memory-thrash tracing (VERDICT r16 #5), OFF by default: per-entry
-        // storage occupancy on stderr, outside the driver's stdout contract
-        if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
-          System.err.println(f"BENCHTRACE $name%-24s ${s}%7.2f s storage ${stBefore / 1e6}%8.1f -> ${storageUsed() / 1e6}%8.1f MB of ${storageMax / 1e6}%.0f")
-        // between queries (outside the timed region): GC when dead
-        // localCheckpoint blocks have accumulated — one query's committed
-        // deltas must not cost the next query memory, but an idle full GC
-        // per entry is pure harness tax (see waterline above)
-        val tg = System.nanoTime()
-        // r16 measurement fix (disclosed in notes): the +768 MB growth trigger
-        // alone can NEVER fire once the storage region is full — eviction caps
-        // apparent growth below the threshold — so dead checkpoint blocks were
-        // never drained and battery entries thrashed against a full cache
-        // (MemoryStore eviction warnings, entries 2-3× their solo times). A
-        // second near-capacity trigger (≥75% of the region and ≥128 MB above
-        // the post-GC anchor) drains the dead blocks; re-anchoring keeps it
-        // from firing when the high water is all live data.
-        val used = storageUsed()
-        if (used > waterline + (768L << 20) ||
-            (used > storageMax / 4 * 3 && used > waterline + nearCapFloor)) {
-          System.gc()
-          gcRuns += 1
-          Thread.sleep(100) // let the cleaner drain before re-anchoring
-          waterline = storageUsed()
-          // r17 (advice): when the near-capacity GC freed little — the high
-          // water is LIVE data, not dead checkpoint blocks — the re-anchored
-          // waterline sits near capacity and the 128 MB secondary threshold
-          // would fire a full GC on every subsequent entry (the per-entry
-          // harness tax the waterline exists to avoid). Escalate the
-          // threshold toward the primary 768 MB band while the region stays
-          // live-hot; any GC that actually drains blocks resets it.
-          nearCapFloor =
-            if (waterline > storageMax / 4 * 3 && used - waterline < (128L << 20))
-              math.min(nearCapFloor * 2, 768L << 20)
-            else 128L << 20
-        }
-        gcSec += (System.nanoTime() - tg) / 1e9
-        if (ok) Some(s) else None
-      }
-      name -> (if (secs.isEmpty) -1.0 else secs.min)
+    // a failing entry reports the -1.0 sentinel
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t = System.nanoTime()
+      val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        false }
+      name -> (if (ok) (System.nanoTime() - t) / 1e9 else -1.0)
     }
-    // The driver captures only the LAST 2000 output chars (every committed
-    // BENCH_r*.json tail is exactly 2000 and `parsed` is null in ALL 16 rounds,
-    // including r02 when the battery was small — the line has never fit). The
-    // 145 query names alone sum to 1759 chars; with minimal JSON syntax and
-    // 2-decimal values the smallest contract-compliant line is 2993 chars, so
-    // the line CANNOT fit the window without renaming or dropping entries
-    // (both forbidden). Best feasible: (a) values at 2 decimals, sf short,
-    // (b) queries object FIRST and summary fields LAST — head truncation eats
-    // leading entries, never the totals, and with the notes prose moved OUT of
-    // the line (r17) the window now shows ~95 trailing entries + all totals
-    // instead of ~35, (c) the COMPLETE line persists to BENCH_LOCAL.json in
-    // the repo (the authoritative per-query record, committed every round),
-    // and the measurement-basis prose to BENCH_NOTES.md.
+    // A runner that keeps only the LAST 2000 output chars cannot hold the 145 entry
+    // names, so: values at 2 decimals, queries FIRST and totals LAST
+    // (head truncation eats leading entries, never the totals), and the complete
+    // line persists to BENCH_LOCAL.json. Measurement-basis notes: BENCH_NOTES.md.
     def f(v: Double): String = "%.2f".format(v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val sfShort = sfDir.split("/").filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    // measurement-basis note: q_truth_maint times the DRed pass + query over a
-    // warmed at-rest closed store SINCE r12 (rounds ≤11 included the closure
-    // build) — cross-round drift tooling must not compare across that change
-    // harness (non-query) wall itemized: session start, untimed JIT warmup,
-    // closed-store build/open, accumulated between-entry GC — the residual of
-    // (driver wall − query total − load − harness) is sbt/JVM start + teardown
+    // harness (non-query) wall: session start, untimed warmup, closed-store
+    // build/open; the rest of the process's wall time is JVM start and teardown
     val harness = s"""{"session":${f(sessionSec)},"warmup":${f(warmupSec)},""" +
-      s""""closed_store":${f(closedSec)},"gc":${f(gcSec)},"gc_runs":$gcRuns}"""
-    // measurement-basis disclosures live OUTSIDE the contract line since r17
-    // (the ~1.4 KB prose was crowding the driver's 2000-char capture window);
-    // they are printed as their own stdout line ahead of the contract line and
-    // persisted to BENCH_NOTES.md alongside BENCH_LOCAL.json
-    val notes = "q_truth_maint basis changed in r12 (DRed over warmed at-rest store; pre-r12 totals not comparable for that entry); q_geo_service basis changed in r14 (warmup() pre-compiles the entry's events-scale INSERT plan over the REAL sf store, pre-warming its input caches) and AGAIN in r15 (warmup() also pre-runs the entry's geo:search half and primes the store's root-lineage probes - multiGraphPids/mayHaveInferred; pre-r15 readings for that entry are not comparable); load basis changed in r16 (cold load builds the SubjectIndex s-keyed sidecar as a 4th fan-out job, and a warm open of a pre-r16 store pays a one-time sidecar build - pre-r16 load_sec not comparable on cold/first-open runs); between-entry GC basis changed in r16 (a near-capacity trigger drains dead checkpoint blocks that the growth-only waterline could never see once the storage region filled - battery entries no longer thrash a full cache, so r15 battery-context readings for scan-heavy entries are not comparable); notes moved out of the contract line in r17 (the prose was crowding the driver's tail-capture window; the line itself is unchanged apart from this field's removal)"
+      s""""closed_store":${f(closedSec)}}"""
     val line =
       s"""{"queries":$qs,"metric":"total","value":${f(total)},"unit":"sec","load_sec":${f(loadSec)},"load_cold":$loadCold,"load_state":"$loadState","harness":$harness,"sf":"$sfShort"}"""
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_NOTES.md"),
-        "# Bench measurement-basis notes\n\n" + notes + "\n")
-    } catch { case _: Exception => () } // read-only cwd must not fail the bench
-    System.err.println("BENCH_NOTES: " + notes)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
+    catch { case _: Exception => () } // read-only cwd must not fail the bench
     println(line)
     spark.stop()
   }

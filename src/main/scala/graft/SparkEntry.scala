@@ -74,16 +74,15 @@ object SparkEntry {
     })
   }
 
-  /** Untimed SESSION warmup for the single-pass driver battery: compile/JIT
-    * the heavy infrastructure families once over TINY inputs with DIFFERENT
-    * constants, so the timed single pass measures engine steady state instead
-    * of first-iteration codegen/class-loading (the r12-r14 A/Bs showed 2-6 s
-    * first-iteration tax on the geo/search/TM/RIO/federation entries, all of
-    * it store-independent). Store-shaped caches (parquet store, closure
-    * store, lexicon, text postings) are warmed separately by the store opens
-    * in Bench; nothing here touches a timed query's inputs or results.
+  /** Untimed SESSION warmup, entry-agnostic: compile/JIT the heavy
+    * infrastructure families once over a TINY store with DIFFERENT constants,
+    * so JVM class loading and JIT are not charged to the first timed entry
+    * (the r12-r14 A/Bs showed 2-6 s first-iteration tax on the
+    * geo/search/TM/RIO/federation entries, all of it store-independent).
+    * Nothing here reads the real store or runs an entry's own plan, so an
+    * entry's first timed run still pays its first-run cost over the store.
     */
-  def warmup(s: SparkSession, dir: Option[String] = None): Unit = {
+  def warmup(s: SparkSession): Unit = {
     def safe(tag: String)(f: => Unit): Unit =
       try f catch { case e: Throwable =>
         System.err.println(s"[warmup] $tag: ${e.getClass.getSimpleName}: ${e.getMessage}") }
@@ -162,46 +161,6 @@ object SparkEntry {
     safe("update")(graft.engine.Update(tiny,
       "INSERT DATA { GRAPH <urn:w:g> { <urn:w:u9> a <urn:w:B> . } }")
       .statements.count())
-    // the geo entry's INSERT-over-events shape against the REAL store (same
-    // precedent as the q_ask/q_join3 store warms: untimed reads of real
-    // partitions): different bind constants, result discarded — compiles the
-    // events-scale scan + insert-capture plan the timed entry's first (and
-    // only) iteration otherwise pays
-    dir.foreach { d =>
-      // root-lineage lazy probes (multi-graph dedup set, inferred-row
-      // presence): computed ONCE per session on the shared store handle and
-      // deferred-to by every mutated lineage (r15 graph-hint threading) —
-      // prime them here so no timed entry absorbs the one-time scan
-      safe("store-probes") {
-        val st = Tpch.store(s, d)
-        st.multiGraphPids; st.mayHaveInferred; ()
-      }
-      safe("geo-insert-shape") {
-        val warmMut = graft.engine.Update(Tpch.store(s, d),
-          """PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>
-            |INSERT { ?e <urn:w:loc2> ?loc } WHERE {
-            |  ?e <urn:p:event_id> ?id .
-            |  BIND(?id - FLOOR(?id/1.7e3)*1700 AS ?lm)
-            |  BIND(?id*3 AS ?i3)
-            |  BIND(?i3 - FLOOR(?i3/3.4e3)*3400 AS ?gm)
-            |  BIND(?lm/1.0e1 - 8.0e1 AS ?la)
-            |  BIND(?gm/1.0e1 - 1.7e2 AS ?lo)
-            |  BIND(STRDT(CONCAT(STR(?la), "#", STR(?lo)), geo:geoSpatialLiteral) AS ?loc) }""".stripMargin)
-        warmMut.statements.count()
-        // the timed entry's OTHER half: a geo:search over the warm's own
-        // mutated store (different predicate/constants, same plan shape) —
-        // grid-range compile + search codegen out of the timed region
-        graft.engine.Engine.query(warmMut,
-          """PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>
-            |SELECT ?res ?lat ?lon WHERE {
-            |  ?res geo:search "inCircle" ;
-            |       geo:predicate <urn:w:loc2> ;
-            |       geo:spatialCircleCenter "20#30" ;
-            |       geo:spatialCircleRadius "1500" ;
-            |       geo:latValue ?lat ; geo:lonValue ?lon }""".stripMargin).count()
-        ()
-      }
-    }
   }
 
   // ======== SPARQL operator battery ========

@@ -28,18 +28,24 @@ object DfOps {
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** At most `n` rows of `df` in one job: every partition stops after `n` rows.
-    * A driver-resident `df` is read without a job. `limit(n).collect()` instead
-    * may run several incremental jobs, each scanning more partitions, so how much
-    * it reads depends on task scheduling.
+    * A driver-resident `df` is read without a job, and so is one that adaptive
+    * execution finds empty at run time (after its shuffle stages). `limit(n)
+    * .collect()` instead may run several incremental jobs, each scanning more
+    * partitions, so how much it reads depends on task scheduling.
     */
   def collectAtMost(df: DataFrame, n: Int): Array[Row] =
     if (isLocal(df)) df.collect().take(n)
     else {
-      // on df's own plan: planned once, its rows copied out of the reused buffer
-      val toRow = ExpressionEncoder(RowEncoder.encoderFor(df.schema)).resolveAndBind()
-        .createDeserializer()
-      df.queryExecution.toRdd.mapPartitions(_.take(n).map(_.copy())).collect()
-        .take(n).map(toRow)
+      // on df's own plan: planned once, its rows copied out of the reused buffer.
+      // A plan replaced by an empty relation has no partitions; collecting it
+      // would still start a (zero-task) job.
+      val rdd = df.queryExecution.toRdd
+      if (rdd.partitions.isEmpty) Array.empty
+      else {
+        val toRow = ExpressionEncoder(RowEncoder.encoderFor(df.schema)).resolveAndBind()
+          .createDeserializer()
+        rdd.mapPartitions(_.take(n).map(_.copy())).collect().take(n).map(toRow)
+      }
     }
 
   /** A driver-resident frame (one LocalRelation) of `rows` on `spark`, with

@@ -456,8 +456,8 @@ object Update {
     * few predicates); capped so a pathological delta falls back to the full-store path.
     */
   private def deltaPids(quads: DataFrame): Option[Seq[Long]] = {
-    val pids = quads.select(col("p")("id")).distinct().limit(1001)
-      .collect().map(_.getLong(0)).toSeq
+    val pids = DfOps.collectAtMost(quads.select(col("p")("id")).distinct(), 1001)
+      .map(_.getLong(0)).toSeq
     if (pids.size > 1000) None else Some(pids)
   }
 

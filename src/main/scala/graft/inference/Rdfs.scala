@@ -2,6 +2,7 @@ package graft.inference
 
 import graft.model.{GraftStore, Term}
 import graft.engine.TermIds
+import graft.engine.DfOps.collectAtMost
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
@@ -312,17 +313,12 @@ object Rdfs {
       .select(col("s"), col("p"), col("alias2").as("o"))
 
   /** The substitutions a changed alias set `delta` (lost or gained pairs)
-    * removes or adds: both one-sided arms, and the both-sided orbit members
-    * whose derivation used a changed pair on EITHER side, the other side
-    * through the full map `orbit` (over-approximate on the lost side;
-    * re-derivation decides retention).
+    * removes or adds: the two one-sided arms. The both-sided orbit members
+    * need no arm of their own: `deltaDerive`'s sameAs stage re-substitutes
+    * this output through the same full alias map.
     */
-  private def sameAsDeltaArms(facts: DataFrame, delta: DataFrame,
-                              orbit: DataFrame): Seq[DataFrame] = {
-    val subj = subjSub(facts, delta)
-    val obj = objSub(facts, delta)
-    Seq(subj, obj, objSub(subj, orbit), subjSub(obj, orbit))
-  }
+  private def sameAsDeltaArms(facts: DataFrame, delta: DataFrame): Seq[DataFrame] =
+    Seq(subjSub(facts, delta), objSub(facts, delta))
 
   /** The non-sameAs facts of class members `ids`. Member facts span every
     * predicate partition (no p_id pruning possible), so when the members are
@@ -609,12 +605,12 @@ object Rdfs {
     // objects). An empty pid set means an empty delta — no separate
     // emptiness job.
     val isMark = col("p")("id") === typeId && col("o")("id").isin(markIds: _*)
-    val pidRows = delta0
+    val pidRows = collectAtMost(delta0
       .select(col("p")("id").as("pid"), isMark.as("chr"),
         when(isMark, col("o")("id")).as("moid"),
         when(isMark, col("s")).as("mprop"),
         when(isMark, col("__r")).as("mrem"))
-      .distinct().limit(1001).collect()
+      .distinct(), 1001)
     if (pidRows.isEmpty) return Left(Some(next))
     val deltaPids = pidRows.map(_.getLong(0)).toSet
     if (pidRows.length > 1000) return recompute
@@ -1215,14 +1211,12 @@ object Rdfs {
         // the member-fact slice's head ids: the driver path supplies them
         // for free; the distributed path probes bounded
         val mIds = cd.lostHeads.getOrElse(
-          cd.del.select("a").distinct().limit(2049).collect()
-            .map(_.getLong(0)).toSeq)
+          collectAtMost(cd.del.select("a").distinct(), 2049).map(_.getLong(0)).toSeq)
         // size-guarded broadcast: a distributed-scale lost-pair set must
         // not be forced through the driver (same 4M-key policy as the
         // mutation paths' hints)
         val lostAlias = if (cd.nDel <= 4000000L) broadcast(dDelAlias) else dDelAlias
-        Some((toSpo(cd.del) +: sameAsDeltaArms(memberFacts(d.oldFacts, mIds),
-            lostAlias, aliasOld))
+        Some((toSpo(cd.del) +: sameAsDeltaArms(memberFacts(d.oldFacts, mIds), lostAlias))
           .reduce(_.unionByName(_)).localCheckpoint())
       }
     def committed(n: Long, df: => DataFrame) = if (n == 0) None else Some(df.localCheckpoint())
@@ -1505,7 +1499,7 @@ object Rdfs {
     */
   private def insertSide(d: TmDelta, s: TmSchema, cone: Option[TmCone],
                          sa: Option[SaDelta], loss: TmLoss): Option[DataFrame] = {
-    val hasInsertWork = !d.added.isEmpty || s.dAdd.nonEmpty ||
+    val hasInsertWork = collectAtMost(d.added, 1).nonEmpty || s.dAdd.nonEmpty ||
       sa.exists(_.addSpo.isDefined)
     if (!hasInsertWork) return None
     val afterLoss = loss.afterLoss
@@ -1515,14 +1509,14 @@ object Rdfs {
     // Likewise new sameAs pairs from a class merge: the pairs themselves
     // plus the substitutions of the merged classes' surviving facts onto
     // the new aliases (one pruned-by-broadcast pass over the fact table;
-    // the orbit arms cover the full class×class orbit closure()
+    // deltaDerive's sameAs stage completes the class×class orbit closure()
     // materializes).
     val saAdds: Seq[DataFrame] = sa.toSeq.flatMap { sd =>
       sd.addSpo.toSeq.flatMap { aSpo =>
         val subs = sd.addAlias.toSeq.flatMap { aAl =>
-          val members = aAl.select(col("xid")).distinct()
-            .limit(2049).collect().map(_.getLong(0)).toSeq
-          sameAsDeltaArms(memberFacts(afterLoss, members), broadcast(aAl), sd.aliasNew)
+          val members =
+            collectAtMost(aAl.select(col("xid")).distinct(), 2049).map(_.getLong(0)).toSeq
+          sameAsDeltaArms(memberFacts(afterLoss, members), broadcast(aAl))
         }
         aSpo +: subs
       }
@@ -1543,7 +1537,7 @@ object Rdfs {
     // conclusions' predicates, SEMI-join it against the broadcast
     // conclusion keys, and anti-join the delta-sized hit set back.
     val ndKeys = graft.engine.DfOps.freshLeaf(keyed(dedup(newDerived)))
-    val ndPidRows = ndKeys.select(col("__pk")).distinct().limit(1001).collect()
+    val ndPidRows = collectAtMost(ndKeys.select(col("__pk")).distinct(), 1001)
     val already = presentKeys(afterLoss,
       if (ndPidRows.length > 1000) None else Some(ndPidRows.map(_.getLong(0)).toSeq),
       ndKeys)
@@ -1568,12 +1562,12 @@ object Rdfs {
   private def applyLayout(d: TmDelta, loss: TmLoss, freshStmts: Option[DataFrame]): GraftStore = {
     val next = d.next
     val laidOut: Option[GraftStore] = next.layoutOpt.flatMap { lay =>
-      val touchedRows = (Seq(loss.lostKeys.select(col("__pk")),
+      val touchedRows = collectAtMost((Seq(loss.lostKeys.select(col("__pk")),
           loss.addedKeys.select(col("__pk")),
           loss.promStmts.select(col("p_id").as("__pk"))) ++
           freshStmts.map(_.select(col("p_id").as("__pk"))))
         .reduce(_.unionByName(_))
-        .distinct().limit(257).collect()
+        .distinct(), 257)
       if (touchedRows.length > 256) None
       else if (touchedRows.isEmpty) Some(next)
       else {

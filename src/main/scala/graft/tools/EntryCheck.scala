@@ -51,7 +51,7 @@ object EntryCheck {
       }
     }
     graft.model.Tpch.store(spark, sfDir).statements.count()
-    graft.SparkEntry.warmup(spark, Some(sfDir))
+    graft.SparkEntry.warmup(spark)
     var bad = 0
     for (n <- names) {
       val fn = graft.SparkEntry.queries.get(n)

@@ -31,7 +31,7 @@ object Profile {
     val planDir = args.lift(3)
     val spark = graft.LocalSpark.session()
     graft.model.Tpch.store(spark, sfDir).statements.count()
-    graft.SparkEntry.warmup(spark, Some(sfDir))
+    graft.SparkEntry.warmup(spark)
     planDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val entries =
       if (names == "all") graft.SparkEntry.queries.keys.toSeq.sorted
@@ -54,8 +54,9 @@ object Profile {
           if (i == 1) planDir.foreach(d => Files.writeString(Paths.get(s"$d/$n.txt"),
             fn(spark, sfDir).queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)))
-          // outside the timed region: let the ContextCleaner free the dead
-          // checkpoint blocks of this iteration, as Bench does between entries
+          // outside the timed region: repeated iterations of one entry leave
+          // their dead checkpoint blocks behind by construction; a GC lets the
+          // ContextCleaner free them before the next iteration is timed
           System.gc()
         } catch { case e: Throwable =>
           System.err.println(s"[profile] $n failed: ${e.getMessage}")

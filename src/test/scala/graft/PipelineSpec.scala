@@ -408,6 +408,38 @@ class PipelineSpec extends GraftSuite {
     assert(m.jobs.sum() <= k + 3, s"${m.jobs.sum()} jobs for a $k-chain")
   }
 
+  test("collectAtMost returns min(n, count) rows in one job, none for a driver-resident frame") {
+    import graft.engine.DfOps
+    val rows = 100
+    // checkpointed over 4 partitions, so reading it is a real job
+    val spread = spark.range(0, rows, 1, 4).toDF("v").localCheckpoint()
+    assert(spread.rdd.getNumPartitions >= 4)
+    for (n <- Seq(10, 30, rows + 50)) {
+      val (got, m) = graft.tools.JobMeter.measure(spark)(DfOps.collectAtMost(spread, n))
+      val ids = got.map(_.getLong(0)).toSeq
+      assert(ids.size == math.min(n, rows) && ids.distinct.size == ids.size &&
+        ids.forall(v => v >= 0 && v < rows), s"n=$n: $ids")
+      assert(m.jobs.sum() == 1, s"n=$n: ${m.jobs.sum()} jobs")
+    }
+    val local = Seq(1L, 2L, 3L).toDF("v")
+    val (got, m) = graft.tools.JobMeter.measure(spark)(DfOps.collectAtMost(local, 2))
+    assert(got.map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(m.jobs.sum() == 0, s"${m.jobs.sum()} jobs")
+  }
+
+  test("collectAtMost of a frame found empty at run time starts no job beyond its stages") {
+    import graft.engine.DfOps
+    import graft.tools.JobMeter
+    val spread = spark.range(0, 100, 1, 4).toDF("v").localCheckpoint()
+    // empty only once its shuffle stage has run; adaptive execution then
+    // replaces the aggregate by an empty relation
+    def none = spread.filter(col("v") < 0).groupBy((col("v") % 7).as("k")).count()
+    val (_, stages) = JobMeter.measure(spark)(none.isEmpty)
+    val (got, m) = JobMeter.measure(spark)(DfOps.collectAtMost(none, 5))
+    assert(got.isEmpty)
+    assert(m.jobs.sum() == stages.jobs.sum(), s"${m.jobs.sum()} jobs vs ${stages.jobs.sum()}")
+  }
+
   test("a star above the driver cap crosses over to distributed rounds") {
     import graft.engine.DfOps
     // s -> hub -> (cap + 100 leaves) -> sink -> end: the hub's round overflows

@@ -82,9 +82,8 @@ def main():
           % (old_p, new_p, abs_files[-1] if abs_files else "<no QBENCH_AB_* file>"))
     for k, ov, nv in missing:
         print("  %-24s %.2f -> %.2f s (%.2fx)" % (k, ov, nv, nv / ov))
-    print("[bench-guard] add min-of-N rows for these entries (SPARK_GRAFT_ONLY=<names> "
-          "SPARK_GRAFT_BENCH_ITERS=N graft.Bench, or graft.tools.Profile <names> <sfDir> N) "
-          "before committing bench artifacts.")
+    print("[bench-guard] add min-of-N rows for these entries "
+          "(graft.tools.Profile <names> <sfDir> N) before committing bench artifacts.")
     return 1
 
 
